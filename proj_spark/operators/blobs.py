@@ -282,7 +282,8 @@ SELECT comp.c AS blob, count(*) AS n_px,
        CAST(count(DISTINCT px.tile) AS BIGINT) AS n_tiles,
        min(px.gx) AS bb_x0, min(px.gy) AS bb_y0,
        max(px.gx) AS bb_x1, max(px.gy) AS bb_y1,
-       sum(px.gx) AS sum_gx, sum(px.gy) AS sum_gy
+       CAST(sum(px.gx) AS BIGINT) AS sum_gx,
+       CAST(sum(px.gy) AS BIGINT) AS sum_gy
 FROM comp JOIN px ON px.gid = comp.gid
 GROUP BY 1
 """

@@ -28,22 +28,19 @@ converge; the pointer jump bounds pathological chains by O(log d).
 
 Scale notes (10^12 rows, 1000 executors):
 - Every step is a key-partitioned join/aggregate on (node) — uniform
-  keys, AQE-splittable.  No driver-side state; exactly ONE driver
-  action per round (the convergence count, which doubles as the lazy
-  localCheckpoint's materializing scan).
-- ``localCheckpoint`` truncates the per-round lineage (without it the
-  plan doubles every round and round k recomputes rounds 1..k-1).
+  keys, AQE-splittable.  No driver-side state.
+- The rounds run in :func:`fixpoint.fixpoint`: lazy ``localCheckpoint``
+  per round and ONE Spark job per round (the changed-label count), a
+  WARNING if ``max_iter`` runs out.
 - Edges are symmetrized once up front; the iteration state is one
   (node, comp) row per node — strictly smaller than the input pairs.
 """
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_LOG = logging.getLogger(__name__)
+from .fixpoint import fixpoint
 
 
 def connected_components(
@@ -51,7 +48,6 @@ def connected_components(
     a: str = "id_a",
     b: str = "id_b",
     max_iter: int = 25,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(node, component) for every node in ``pairs``; ``component`` is
     the minimum node id (natural ordering of the id type) in the
@@ -73,14 +69,12 @@ def connected_components(
         F.col("u") != F.col("v")
     )
     sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.distinct()
-    if checkpoint:
-        sym = sym.localCheckpoint(eager=False)
-    lab = ends.distinct().withColumn("comp", F.col("u"))
-    for _ in range(max_iter):
+    sym = sym.distinct().localCheckpoint(eager=False)
+
+    def step(lab: DataFrame) -> DataFrame:
         # propagate: min label over the neighborhood (inclusive).  The
-        # round's OLD label rides along as _oc so convergence detection
-        # below is a scan of the checkpointed frame, not an extra join.
+        # round's OLD label rides along as _oc so the convergence count
+        # is a scan of the checkpointed frame, not an extra join.
         nb = (
             sym.join(
                 lab.select(F.col("u").alias("v"), F.col("comp").alias("_vc")), "v"
@@ -94,7 +88,7 @@ def connected_components(
             F.col("comp").alias("_oc"),
         )
         # shortcut: jump to the label's own label
-        new = (
+        return (
             new.alias("x")
             .join(
                 new.select(
@@ -111,25 +105,14 @@ def connected_components(
                 F.col("x._oc").alias("_oc"),
             )
         )
-        if checkpoint:
-            # LAZY checkpoint: the convergence count below is the first
-            # (and only) action on the frame, so one job per round both
-            # materializes the checkpointed RDD (full scan — count never
-            # short-circuits) and measures convergence.  The old
-            # eager=True + limit(1).count() shape scheduled two jobs per
-            # round (round-4 review / r3 task 6).
-            new = new.localCheckpoint(eager=False)
-        changed = new.where(F.col("comp") != F.col("_oc")).count()
-        lab = new.select("u", "comp")
-        if changed == 0:
-            break
-    else:
-        _LOG.warning(
-            "connected_components: labels still changing after max_iter=%d "
-            "rounds — returning possibly-unconverged components (a path "
-            "graph of length > 2^max_iter; raise max_iter)",
-            max_iter,
-        )
+
+    lab = fixpoint(
+        ends.distinct().withColumn("comp", F.col("u")),
+        step,
+        F.col("comp") != F.col("_oc"),
+        max_iter,
+        "connected_components",
+    )
     return lab.select(F.col("u").alias("node"), F.col("comp").alias("component"))
 
 

@@ -33,15 +33,12 @@ and the same min-core-neighbor border rule.
 """
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import expressions as E
 from .components import connected_components
-
-EARTH_M = E.EARTH_RADIUS_M
+from .knn import covering_ring
 
 
 def eps_neighbor_pairs(
@@ -56,18 +53,7 @@ def eps_neighbor_pairs(
     """Directed pairs (id_a, id_b), a ≠ b, haversine(a, b) ≤ eps_m.
     Cell-bucketed: shuffle volume is |points|·(2r+1)² on the exploded
     side and |points| on the other — never |points|²."""
-    cell_h_deg = 180.0 / (1 << res)
-    cell_h_m = math.pi * EARTH_M * cell_h_deg / 180.0
-    dphi_deg = math.degrees(eps_m / EARTH_M)
-    phi_max = points.agg(F.max(F.abs(F.col(lat)))).first()[0] or 0.0
-    phi_worst = min(phi_max + dphi_deg, 89.9)
-    cos_w = max(math.cos(math.radians(phi_worst)), 1e-6)
-    ring = max(int(math.ceil((eps_m / cell_h_m / cos_w) * (1.0 + 1e-9))), 1)
-    if ring > max_ring:
-        raise ValueError(
-            f"eps {eps_m:.0f} m at |lat|<={phi_worst:.1f} needs ring "
-            f"{ring} > max_ring={max_ring} at res={res}; lower res"
-        )
+    ring = covering_ring(points, lat, eps_m, res, max_ring, "eps_neighbor_pairs")
     a = points.select(
         F.col(id_col).alias("id_a"),
         F.col(lon).alias("_alon"),

@@ -26,14 +26,11 @@ floor(dist / bin_w), and the value term (v_a - v_b)^2 is exact int64
 """
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import expressions as E
-
-EARTH_M = E.EARTH_RADIUS_M
+from .knn import covering_ring
 
 
 def variogram_k(
@@ -54,20 +51,7 @@ def variogram_k(
 
     ``value`` must be integral (cast to long) so sq_sum is exact.
     """
-    cell_h_deg = 180.0 / (1 << res)
-    cell_h_m = math.pi * EARTH_M * cell_h_deg / 180.0
-    dphi_deg = math.degrees(max_dist_m / EARTH_M)
-    phi_max = points.agg(F.max(F.abs(F.col(lat)))).first()[0] or 0.0
-    phi_worst = min(phi_max + dphi_deg, 89.9)
-    cos_w = max(math.cos(math.radians(phi_worst)), 1e-6)
-    ring = max(
-        int(math.ceil((max_dist_m / cell_h_m / cos_w) * (1.0 + 1e-9))), 1
-    )
-    if ring > max_ring:
-        raise ValueError(
-            f"max_dist {max_dist_m:.0f} m at |lat|<={phi_worst:.1f} needs "
-            f"ring {ring} > max_ring={max_ring} at res={res}; lower res"
-        )
+    ring = covering_ring(points, lat, max_dist_m, res, max_ring, "variogram_k")
     a = points.select(
         F.col(id_col).alias("id_a"),
         F.col(lon).alias("_alon"),
@@ -87,6 +71,7 @@ def variogram_k(
     ).withColumn("_bcell", E.cell_id("_blon", "_blat", res))
     bw = float(max_dist_m) / int(n_bins)
     d = F.col("dist_m")
+    dv = F.col("_av") - F.col("_bv")  # long: the square stays exact int64
     return (
         a.join(b, a["_cell"] == b["_bcell"], "inner")
         # unordered pairs once; also kills self-pairs
@@ -97,7 +82,7 @@ def variogram_k(
         .where(d < F.lit(float(max_dist_m)))
         .select(
             F.floor(d / F.lit(bw)).cast("long").alias("bin"),
-            ((F.col("_av") - F.col("_bv")) ** 2).cast("long").alias("_sq"),
+            (dv * dv).alias("_sq"),
         )
         .groupBy("bin")
         .agg(

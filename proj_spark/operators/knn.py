@@ -35,6 +35,7 @@ _LOG = logging.getLogger(__name__)
 from itertools import count as _count
 
 from ..functions import expressions as E
+from .fixpoint import job_description
 
 # observation names must be unique within a query plan; two knn_join
 # results composed into one query would otherwise collide on the name
@@ -250,6 +251,40 @@ def knn_join(
     return good.unionByName(redo)
 
 
+def covering_ring(
+    points: DataFrame,
+    lat: str,
+    radius_m: float,
+    res: int,
+    max_ring: int,
+    operator: str,
+) -> int:
+    """The k-ring of ``res`` cells that GUARANTEES every point within
+    ``radius_m`` of any row of ``points`` is covered: a hit differs by
+    at most ``radius/R`` rad in latitude and ``radius/(R cos phi)`` rad
+    in longitude, so ``ring = ceil(worst-axis span / cell size)`` at
+    the set's extreme latitude widened by the latitude span itself.
+    That extreme latitude is one eager aggregate, run as the job
+    ``"<operator>:phi_max"``.  Raises when the ring exceeds
+    ``max_ring`` — the resolution is too fine for this radius; lower
+    ``res`` (each -1 halves the ring) instead of silently exploding
+    the probe fan-out."""
+    cell_h_m = math.pi * EARTH_M * (180.0 / (1 << res)) / 180.0
+    dphi_deg = math.degrees(radius_m / EARTH_M)
+    with job_description(points.sparkSession.sparkContext, f"{operator}:phi_max"):
+        phi_max = points.agg(F.max(F.abs(F.col(lat)))).first()[0] or 0.0
+    phi_worst = min(phi_max + dphi_deg, 89.9)
+    cos_w = max(math.cos(math.radians(phi_worst)), 1e-6)
+    ring = max(int(math.ceil((radius_m / cell_h_m / cos_w) * (1.0 + 1e-9))), 1)
+    if ring > max_ring:
+        raise ValueError(
+            f"radius {radius_m:.0f} m at |lat|<={phi_worst:.1f} needs a "
+            f"ring of {ring} > max_ring={max_ring} cells at res={res}; "
+            f"use res<={res - math.ceil(math.log2(ring / max_ring))}"
+        )
+    return ring
+
+
 def within_distance_join(
     queries: DataFrame,
     candidates: DataFrame,
@@ -270,31 +305,13 @@ def within_distance_join(
     Plan shape (10^12-safe): candidates compute one cell id (narrow);
     the small query side explodes a k-ring sized to GUARANTEE the
     radius is covered and is broadcast — the big side never shuffles.
-    The ring bound: a hit differs from its query by at most
-    ``radius/R`` rad in latitude and ``radius/(R cos phi)`` rad in
-    longitude, so ``ring = ceil(worst-axis span / cell size)`` cells
-    suffice, using the query set's extreme latitude (one tiny driver
-    aggregate on the SMALL side) widened by the latitude span itself.
-    Raises when the needed ring exceeds ``max_ring`` — the resolution
-    is too fine for this radius; lower ``res`` (each -1 halves the
-    ring) instead of silently exploding the probe fan-out.
+    The ring comes from :func:`covering_ring` (one tiny driver
+    aggregate on the SMALL side); it raises when the ring exceeds
+    ``max_ring``.
     """
-    cell_h_deg = 180.0 / (1 << res)
-    cell_h_m = math.pi * EARTH_M * cell_h_deg / 180.0
-    dphi_deg = math.degrees(radius_m / EARTH_M)
-
-    phi_max = (
-        queries.agg(F.max(F.abs(F.col(q_lat)))).first()[0] or 0.0
+    ring = covering_ring(
+        queries, q_lat, radius_m, res, max_ring, "within_distance_join"
     )
-    phi_worst = min(phi_max + dphi_deg, 89.9)
-    cos_w = max(math.cos(math.radians(phi_worst)), 1e-6)
-    ring = max(int(math.ceil((radius_m / cell_h_m / cos_w) * (1.0 + 1e-9))), 1)
-    if ring > max_ring:
-        raise ValueError(
-            f"radius {radius_m:.0f} m at |lat|<={phi_worst:.1f} needs a "
-            f"ring of {ring} > max_ring={max_ring} cells at res={res}; "
-            f"use res<={res - math.ceil(math.log2(ring / max_ring))}"
-        )
 
     c = candidates.select(
         F.col(c_id).alias("neighbor_id"),

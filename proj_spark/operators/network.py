@@ -1,13 +1,14 @@
-"""Network analysis: single-source shortest path (SSSP) by distributed
-Bellman-Ford label relaxation.
+"""Network analysis: shortest paths and network catchments by
+distributed Bellman-Ford label relaxation.
 
 The road-network / utility-network primitive the spatial joins feed
 (snap_points gives the nearest segment; this gives network distance).
-Same execution shape as ``components.connected_components`` — per
-round ONE join + groupBy relaxes every frontier label, the old
-distance rides along so convergence detection is a scan of the
-checkpointed frame (one job per round), and rounds are bounded by the
-longest shortest-path HOP count, not |V|:
+:func:`nearest_facility` is multi-source relaxation with facility
+allocation; :func:`sssp` is its single-source case.  Per round ONE
+join + groupBy relaxes every frontier label, the old label rides
+along as a column, and :func:`fixpoint.fixpoint` runs the rounds (one
+Spark job each, a WARNING if ``max_iter`` runs out).  Rounds are
+bounded by the longest shortest-path HOP count, not |V|:
 
     d_{k+1}(v) = min(d_k(v), min over edges (u,v,w) of d_k(u) + w)
 
@@ -23,12 +24,10 @@ path, cross-checked against Dijkstra in tests.
 """
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_LOG = logging.getLogger(__name__)
+from .fixpoint import fixpoint
 
 _INF = (1 << 62) - 1
 
@@ -41,63 +40,16 @@ def sssp(
     w: str = "w",
     directed: bool = False,
     max_iter: int = 64,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Exact integer shortest-path distances from ``source`` over
     ``edges`` (u, v, w int64 >= 0).  Returns (node, dist) for every
     REACHABLE node (unreachable nodes are absent, the sparse
-    convention).  Undirected by default (edges traversed both ways)."""
-    e = edges.select(
-        F.col(u).cast("long").alias("u"),
-        F.col(v).cast("long").alias("v"),
-        F.col(w).cast("long").alias("w"),
-    )
-    if not directed:
-        e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-    e = e.distinct()
-    if checkpoint:
-        e = e.localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    lab = nodes.withColumn(
-        "dist",
-        F.when(F.col("node") == F.lit(int(source)), F.lit(0).cast("long"))
-        .otherwise(F.lit(_INF)),
-    )
-    for _ in range(max_iter):
-        relaxed = (
-            e.join(
-                lab.select(F.col("node").alias("u"), F.col("dist").alias("_du")),
-                "u",
-            )
-            .where(F.col("_du") < F.lit(_INF))
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.min(F.col("_du") + F.col("w")).alias("_cand"))
-        )
-        new = lab.join(relaxed, "node", "left").select(
-            "node",
-            F.least("dist", F.coalesce("_cand", "dist")).alias("dist"),
-            F.col("dist").alias("_od"),
-        )
-        if checkpoint:
-            # lazy checkpoint + the convergence count below = one job
-            # per round (the components.py pattern)
-            new = new.localCheckpoint(eager=False)
-        changed = new.where(F.col("dist") != F.col("_od")).count()
-        lab = new.select("node", "dist")
-        if changed == 0:
-            break
-    else:
-        _LOG.warning(
-            "sssp: distances still improving after max_iter=%d rounds — "
-            "returning possibly-unconverged distances (longest shortest "
-            "path exceeds max_iter hops; raise max_iter)",
-            max_iter,
-        )
-    return lab.where(F.col("dist") < F.lit(_INF))
+    convention).  Undirected by default (edges traversed both ways).
+    The single-source case of :func:`nearest_facility` — its rounds
+    run (and are described) as ``nearest_facility``."""
+    return nearest_facility(
+        edges, [source], u=u, v=v, w=w, directed=directed, max_iter=max_iter
+    ).select("node", "dist")
 
 
 def lattice_edges_sql(n_x: int, n_y: int) -> str:
@@ -188,16 +140,14 @@ def nearest_facility(
     w: str = "w",
     directed: bool = False,
     max_iter: int = 64,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Multi-source SSSP with facility allocation (network catchment
     assignment): every reachable node gets (dist, fac) = the network
     distance to its nearest facility and that facility's id, ties
     broken by the SMALLEST facility id — deterministic and
-    engine-independent.  Same one-job-per-round relaxation as
-    :func:`sssp`; the label is a lexicographic (dist, fac) struct, so
-    ``F.min``/``F.least`` implement the tie-broken min-plus algebra
-    natively (struct ordering is lexicographic)."""
+    engine-independent.  The label is a lexicographic (dist, fac)
+    struct, so ``F.min``/``F.least`` implement the tie-broken min-plus
+    algebra natively (struct ordering is lexicographic)."""
     e = edges.select(
         F.col(u).cast("long").alias("u"),
         F.col(v).cast("long").alias("v"),
@@ -205,9 +155,7 @@ def nearest_facility(
     )
     if not directed:
         e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-    e = e.distinct()
-    if checkpoint:
-        e = e.localCheckpoint(eager=False)
+    e = e.distinct().localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
@@ -224,7 +172,8 @@ def nearest_facility(
             F.when(is_src, F.col("node")).otherwise(F.lit(-1)).alias("fac"),
         ).alias("lb"),
     )
-    for _ in range(max_iter):
+
+    def step(lab: DataFrame) -> DataFrame:
         relaxed = (
             e.join(
                 lab.select(F.col("node").alias("u"), F.col("lb").alias("_lu")),
@@ -241,23 +190,15 @@ def nearest_facility(
                 ).alias("_cand")
             )
         )
-        new = lab.join(relaxed, "node", "left").select(
+        return lab.join(relaxed, "node", "left").select(
             "node",
             F.least("lb", F.coalesce("_cand", "lb")).alias("lb"),
             F.col("lb").alias("_ol"),
         )
-        if checkpoint:
-            new = new.localCheckpoint(eager=False)
-        changed = new.where(F.col("lb") != F.col("_ol")).count()
-        lab = new.select("node", "lb")
-        if changed == 0:
-            break
-    else:
-        _LOG.warning(
-            "nearest_facility: labels still improving after max_iter=%d "
-            "rounds — raise max_iter",
-            max_iter,
-        )
+
+    lab = fixpoint(
+        lab, step, F.col("lb") != F.col("_ol"), max_iter, "nearest_facility"
+    )
     return lab.where(F.col("lb.dist") < F.lit(_INF)).select(
         "node", F.col("lb.dist").alias("dist"), F.col("lb.fac").alias("fac")
     )

@@ -16,8 +16,9 @@ Bellman-Ford relaxation in network.py):
    4·tile_px bytes/side) and re-sweep; information crosses one full
    tile per round, so ROUNDS <= the tile-grid Manhattan diameter
    (n_x + n_y), not the pixel diameter.
-3. Convergence = no tile changed this round — one count action per
-   round on the fused-group output (the components.py discipline).
+3. Convergence = no tile changed this round: :func:`fixpoint.fixpoint`
+   runs the rounds, one changed-tile count job each, and warns if the
+   round bound runs out.
 
 Shuffle per round is ~1.06x the 4-byte/px field (body + strips via
 warp.fused_group_map); total traffic = rounds × that, the inherent
@@ -43,6 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .fixpoint import fixpoint
 from .warp import fused_group_map
 
 _INF = np.int32(1 << 30)
@@ -160,12 +162,15 @@ def distance_transform(
         return (x, y, new.tobytes(), changed)
 
     cols = ["x", "y", "dist", "changed"]
-    for _ in range(rounds):
-        frags = field.mapInPandas(emit, _FRAG)
-        field = fused_group_map(frags, ["x", "y"], relax, cols, _FIELD)
-        field = field.localCheckpoint(eager=False)
-        if field.agg(F.sum("changed")).first()[0] == 0:
-            break
+    field = fixpoint(
+        field,
+        lambda f: fused_group_map(
+            f.mapInPandas(emit, _FRAG), ["x", "y"], relax, cols, _FIELD
+        ),
+        F.col("changed") != 0,
+        rounds,
+        "distance_transform",
+    )
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lidx = (

@@ -294,9 +294,11 @@ def lcg_tiles(
     add: int = 12345,
 ) -> DataFrame:
     """Deterministic source raster: pixel (gx, gy) has value
-    ``((gidx*2654435761 + 12345) mod 2^32) // 2^24`` with
-    gidx = gy*width + gx — the same closed form the SQL oracle
-    evaluates.  Built distributed (one task per tile row band)."""
+    ``((gidx*mul + add) mod 2^32) // 2^24`` with gidx = gy*width + gx
+    (defaults ``mul=2654435761``, ``add=12345``; the change-detection
+    fixture passes other constants for its second epoch) — the same
+    closed form the SQL oracle evaluates.  Built distributed (one task
+    per tile row band)."""
     ts = grid.tile_px
     if grid.width % ts or grid.height % ts:
         # warp_to_webmerc / extract_chips ceil-divide and handle partial

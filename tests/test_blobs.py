@@ -35,15 +35,16 @@ def test_label_tile_kernel():
 
 def test_blobs_vs_duckdb_oracle(spark):
     tiles = block_hash_tiles(spark, W, H, TS)
-    got = sorted(
-        tuple(int(v) for v in r)
-        for r in label_blobs(tiles, TS, W, ISO).collect()
-    )
-    want = sorted(
-        tuple(int(v) for v in row)
-        for row in duckdb.sql(blobs_oracle_sql(W, H, TS, ISO)).fetchall()
-    )
+    out = label_blobs(tiles, TS, W, ISO)
+    ora = duckdb.sql(blobs_oracle_sql(W, H, TS, ISO))
+    got = sorted(tuple(int(v) for v in r) for r in out.collect())
+    want = sorted(tuple(int(v) for v in row) for row in ora.fetchall())
     assert got == want
+    # value types too: every Spark column is bigint, and so must be the
+    # oracle's (a bare DuckDB sum() is HUGEINT, read as decimal/float)
+    spark_types = {f.name: f.dataType.simpleString() for f in out.schema}
+    assert set(spark_types.values()) == {"bigint"}
+    assert {c: str(t).lower() for c, t in zip(ora.columns, ora.types)} == spark_types
     # the fixture must exercise the cross-tile merge path
     assert sum(1 for r in got if r[2] > 1) >= 5
     # conservation: every masked pixel lands in exactly one blob

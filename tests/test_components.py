@@ -1,8 +1,12 @@
-"""Connected components / dedup groups (operators/components.py).
+"""Connected components / dedup groups (operators/components.py), and
+the fixpoint driver (operators/fixpoint.py) gates shared by every
+iterative operator.
 
 Reference: a plain Python union-find over the same edges.
 """
 from __future__ import annotations
+
+import logging
 
 import numpy as np
 import pytest
@@ -136,39 +140,118 @@ def test_canonical_by_quality(spark):
     assert out == {"d1": False, "d2": True, "d3": False, "d4": True}
 
 
-def test_one_spark_job_per_round(spark):
-    """Regression gate for the one-action-per-round shape (r3 task 6 /
-    round-4 review): the lazy ``localCheckpoint(eager=False)`` must be
-    materialized BY the convergence count, not by a separate eager job.
-    With AQE off every action is exactly one job, so jobs-in-group ==
-    rounds; the old ``eager=True`` + ``limit(1).count()`` shape would
-    record 2x."""
+def _cc(spark, **bound):
+    edges = [(i, i + 1) for i in range(16)] + [(100, 101), (101, 102)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    return connected_components(df, **bound)
+
+
+def _sssp(spark, **bound):
+    from proj_spark.operators.network import lattice_edges, sssp
+
+    return sssp(lattice_edges(spark, 6, 4), 0, **bound)
+
+
+def _facility(spark, **bound):
+    from proj_spark.operators.network import lattice_edges, nearest_facility
+
+    return nearest_facility(lattice_edges(spark, 6, 4), [0, 23], **bound)
+
+
+def _dt(spark, **bound):
+    from proj_spark.operators.blobs import block_hash_tiles
+    from proj_spark.operators.rasterdt import distance_transform
+
+    tiles = block_hash_tiles(spark, 128, 96, 32)
+    return distance_transform(tiles, 32, 4, 3, 240, **bound)
+
+
+# operator -> (builder, round-bound keyword, name its rounds run under);
+# sssp is nearest_facility's single-source case and runs as it
+ITERATIVE = {
+    "connected_components": (_cc, "max_iter", "connected_components"),
+    "sssp": (_sssp, "max_iter", "nearest_facility"),
+    "nearest_facility": (_facility, "max_iter", "nearest_facility"),
+    "distance_transform": (_dt, "max_rounds", "distance_transform"),
+}
+
+
+def _job_descriptions(sc, jobs):
+    """Job descriptions read back from the live status store."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    store = jsc.statusStore()
+    out = []
+    for j in sorted(jobs):
+        desc = store.job(j).description()
+        out.append(desc.get() if desc.isDefined() else None)
+    return out
+
+
+@pytest.mark.parametrize("op", sorted(ITERATIVE))
+def test_one_spark_job_per_round(spark, op):
+    """Regression gate for the one-action-per-round shape of the
+    fixpoint driver: the lazy ``localCheckpoint(eager=False)`` must be
+    materialized BY the convergence count, not by a separate eager
+    job.  With AQE and auto-broadcast off every action is exactly one
+    job (a broadcast exchange runs its own job, one per round on the
+    lattice fixtures), so jobs-in-group == count() calls; an eager
+    checkpoint, or a convergence test by another action than
+    ``count()``, breaks the equality.  Each round's job is described
+    ``<name>:round <k>`` and the caller's description is restored for
+    the final count."""
     import uuid
 
+    build, _, name = ITERATIVE[op]
     sc = spark.sparkContext
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     rounds = {"n": 0}
 
     def counting_count(self):
         rounds["n"] += 1
         return real_count(self)
 
-    group = f"cc-jobcount-{uuid.uuid4().hex[:8]}"
-    edges = [(i, i + 1) for i in range(16)] + [(100, 101), (101, 102)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    cls = type(df)  # the classic runtime class, not the API base
+    group = f"fixpoint-jobcount-{uuid.uuid4().hex[:8]}"
+    cls = type(spark.range(1))  # the classic runtime class, not the API base
     real_count = cls.count
     cls.count = counting_count
     try:
-        sc.setJobGroup(group, "cc job-count gate")
-        connected_components(df).count()  # final count = 1 extra action
+        sc.setJobGroup(group, "fixpoint job-count gate")
+        build(spark).count()  # final count = 1 extra action
     finally:
         cls.count = real_count
         sc.setJobGroup(None, None)
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     # rounds["n"] includes the final materializing count -> actions ==
     # (convergence rounds) + 1; every action is one job, none extra.
-    assert rounds["n"] >= 3  # the chain needs >1 round, sanity
+    assert rounds["n"] >= 3  # the fixture needs >1 round, sanity
     assert len(jobs) == rounds["n"], (len(jobs), rounds["n"])
+    n = rounds["n"] - 1
+    assert _job_descriptions(sc, jobs) == [
+        f"{name}:round {k}" for k in range(1, n + 1)
+    ] + ["fixpoint job-count gate"]
+
+
+@pytest.mark.parametrize("op", sorted(ITERATIVE))
+def test_exhausted_round_bound_warns(spark, op, caplog):
+    """A round bound that runs out is never silent: one WARNING names
+    the operator and the changed rows of every round."""
+    build, bound_kw, name = ITERATIVE[op]
+    with caplog.at_level(logging.WARNING, logger="proj_spark"):
+        build(spark, **{bound_kw: 1})
+    msgs = [
+        r.getMessage()
+        for r in caplog.records
+        if r.levelno == logging.WARNING and r.name.startswith("proj_spark")
+    ]
+    assert len(msgs) == 1, msgs
+    assert msgs[0].startswith(f"{name}: not converged after max_rounds=1")
+    assert "changed rows per round: [" in msgs[0]

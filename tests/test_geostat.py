@@ -90,3 +90,47 @@ def test_ring_guard():
     )
     with pytest.raises(ValueError):
         variogram_k(pts, 5_000_000.0, 4, res=8, id_col="pk")
+
+
+def test_sq_sum_exact_beyond_double_precision(spark, pts):
+    """|v_a - v_b| above 1e8 puts the square above 2^53, where a double
+    pow would round the odd squares: sq_sum must still equal the
+    integer multiply."""
+    big = pts.withColumn(
+        "v", F.col("v") + F.pmod(F.col("pk"), F.lit(2)) * F.lit(100_000_000)
+    )
+    rows = [(r["pk"], r["lon"], r["lat"], r["v"]) for r in big.collect()]
+    # both parities, so cross-parity differences are odd
+    assert {v % 2 for *_, v in rows} == {0, 1}
+    got = {
+        int(r["bin"]): (int(r["n_pairs"]), int(r["sq_sum"]))
+        for r in variogram_k(big, MAXD, NBINS, id_col="pk").collect()
+    }
+    want = _brute(rows)
+    assert got == want
+    assert max(s for _, s in want.values()) > 1 << 53
+
+
+def test_build_time_probe_is_a_described_job(spark, pts):
+    """The builder's one eager job (the extreme-latitude probe behind
+    the ring bound) runs as ``variogram_k:phi_max``; the caller's job
+    description is restored afterwards."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"phi-max-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "caller")
+    try:
+        variogram_k(pts, MAXD, NBINS, id_col="pk")
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobGroup(None, None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    store = jsc.statusStore()
+    descs = [
+        store.job(j).description().get()
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    ]
+    # one aggregate (two jobs when AQE runs its shuffle stage apart)
+    assert descs and set(descs) == {"variogram_k:phi_max"}

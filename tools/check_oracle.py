@@ -1,7 +1,10 @@
 """Local mirror of the driver's correctness gate: run every
 __spark_entry__ query on Spark AND its oracle on DuckDB at sf0.01,
 compare row count, column names, and an order-insensitive multiset of
-stringified rows.  Usage: python tools/check_oracle.py [name ...]
+rows whose values are compared as (type name, stringified value).  The
+oracle is read through Arrow, as a DataFrame consumer reads it, so a
+DuckDB HUGEINT/DECIMAL column arrives as ``Decimal`` and cannot pass
+for Spark's ``bigint`` ``int``.  Usage: python tools/check_oracle.py [name ...]
 """
 from __future__ import annotations
 
@@ -19,8 +22,8 @@ TABLES = [
 
 def norm(v):
     if isinstance(v, float):
-        return repr(round(v, 9))
-    return str(v)
+        return ("float", repr(round(v, 9)))
+    return (type(v).__name__, str(v))
 
 
 def main():
@@ -60,9 +63,12 @@ def main():
             print(f"ok    {name}: rows-only, {len(srows)} rows")
             continue
         try:
-            cur = con.execute(oracles[name])
-            ocols = [d[0] for d in cur.description]
-            orows = [tuple(norm(v) for v in r) for r in cur.fetchall()]
+            tab = con.execute(oracles[name]).fetch_arrow_table()
+            ocols = tab.column_names
+            orows = [
+                tuple(norm(v) for v in r)
+                for r in zip(*(c.to_pylist() for c in tab.columns))
+            ]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: duckdb error: {e}")
             failures.append(name)
