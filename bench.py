@@ -1,16 +1,18 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+Writes the full record to a sidecar JSON under /tmp/proj_spark_bench/,
+prints its path, then ONE compact JSON headline as the last line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "rows_per_sec": ...}
+   "queries": {name: sec, ...}, "sf": ..., "rows_per_sec": ..., ...}
 
 The flagship measurement mirrors the BASELINE.json metric: spatial
 join + tile assignment over the input_hint image table (point-in-
 polygon against fixture polygons, multi-zoom tile rollup), reported
 as rows/sec.  Set SPARK_GRAFT_SCALING=8,32 to run the flagship at two
-parallelism levels and report scaling efficiency (the sandbox stand-in
-for the N->4N executor criterion).
+parallelism levels and report scaling efficiency, or to one of
+shuffle/payload/warp/compute/cluster for an N-vs-4N executor pair on
+local-cluster (the sandbox stand-in for the N->4N criterion).
 """
 from __future__ import annotations
 
@@ -187,6 +189,13 @@ def _pts_uncl_table(spark, n_images: int):
     return spark.read.parquet(cache)
 
 
+# the flagship input's (cache dir, table) for SPARK_GRAFT_FLAGSHIP_TABLE
+_FLAGSHIP_CACHE, _FLAGSHIP_SOURCE = {
+    "wide": (_img_cache, _image_table),
+    "unclustered": (_pts_uncl_cache, _pts_uncl_table),
+}.get(FLAGSHIP_TABLE, (_pts_cache, _pts_table))
+
+
 def _warm_map_in_pandas(spark, slots: int):
     """Untimed warm-up of the mapInPandas path: the FIRST mapInPandas
     action on a fresh worker pool pays python-worker fork + module
@@ -303,12 +312,7 @@ def _flagship(spark, n_images: int):
     from proj_spark.operators.fused import reproject_pip_tile_rollup
     from proj_spark.operators.gridshift import make_synthetic_grid, register_grid
 
-    if FLAGSHIP_TABLE == "wide":
-        imgs = _image_table(spark, n_images)
-    elif FLAGSHIP_TABLE == "unclustered":
-        imgs = _pts_uncl_table(spark, n_images)
-    else:
-        imgs = _pts_table(spark, n_images)
+    imgs = _FLAGSHIP_SOURCE(spark, n_images)
     register_grid("conus_syn", make_synthetic_grid())
     # zooms [4, 8, 11] chosen so tiles stay dense at bench scale (~300+
     # rows per z11 tile at 16M rows over CONUS) — matching the per-tile
@@ -342,15 +346,51 @@ def _flagship(spark, n_images: int):
     return n_images, n_tiles + int(stats.n_polys)
 
 
-def run_benchmarks(cpus: int = CPUS) -> dict:
-    from pyspark.sql import SparkSession
+def _sink(df) -> int:
+    """Run ``df`` to completion through the noop sink and return its
+    row count.  A timed ``count()`` lets Catalyst prune the projected
+    columns, and with them the pandas-UDF kernels that compute them."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    return obs.get["rows"]
+
+
+def _n_verified(df) -> int:
+    """Rows passing the payload gate (decode + PSNR>=40 + caption)."""
+    from pyspark.sql import functions as F
+
+    from proj_spark.sources.images import verify_payloads
+
+    ok = F.when(F.col("caption_ok") & F.col("pixels_ok"), 1).otherwise(0)
+    return int(verify_payloads(df).agg(F.sum(ok)).collect()[0][0])
+
+
+def _payload_lane(spark, n_img: int, cpus: int, path: str) -> dict:
+    """Encode ``n_img`` real PNG/JPEG payloads to ``path``, then time
+    the decode-verify gate over every stored row."""
+    from proj_spark.sources.images import generate_images
+
+    t0 = time.time()
+    generate_images(spark, n_img, partitions=4 * cpus).write.mode("overwrite").parquet(path)
+    lane = {"encode_sec": round(time.time() - t0, 3)}
+    t0 = time.time()
+    ok = _n_verified(spark.read.parquet(path))
+    lane["decode_verify_sec"] = round(time.time() - t0, 3)
+    lane["n_images"] = n_img
+    lane["n_verified_ok"] = ok
+    lane["decode_rows_per_sec"] = round(n_img / lane["decode_verify_sec"], 1)
+    return lane
+
+
+def run_benchmarks(cpus: int = CPUS) -> dict:
     import __spark_entry__ as entrymod
     from proj_spark.session import build_session
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
     spark = build_session("proj-spark-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -408,7 +448,7 @@ def run_benchmarks(cpus: int = CPUS) -> dict:
 
         for name in headline:
             t0 = time.time()
-            qs[name](spark, sf_dir).count()
+            _sink(qs[name](spark, sf_dir))
             into[name] = round(time.time() - t0, 3)
         # free the ranked-stage caches the knn plans pinned (one per
         # escalation level) now that the action is done
@@ -428,7 +468,7 @@ def run_benchmarks(cpus: int = CPUS) -> dict:
             tokenize(spark.read.parquet(f"{sf_dir}/documents.parquet")), w=3
         )
         sigs = minhash_signatures(docs, id_col="doc_id", deterministic=False)
-        minhash_lsh_pairs(sigs).count()
+        _sink(minhash_lsh_pairs(sigs))
         into["minhash_lsh_fast"] = round(time.time() - t0, 3)
 
     # sf0.1 suite: 3 reps, per-query MEDIAN recorded (round-5 verdict
@@ -463,28 +503,9 @@ def run_benchmarks(cpus: int = CPUS) -> dict:
     # comparable round-over-round): the metric's PSNR>=40 payload gate
     # as a throughput number — generate real PNG/JPEG payloads, then
     # decode + verify every row (sources/jpeg.py baseline codec).
-    img_lane: dict[str, float] = {}
+    n_img = int(os.environ.get("SPARK_GRAFT_BENCH_PAYLOADS", "20000"))
     try:
-        from pyspark.sql import functions as BF
-
-        from proj_spark.sources.images import generate_images, verify_payloads
-
-        n_img = int(os.environ.get("SPARK_GRAFT_BENCH_PAYLOADS", "20000"))
-        t0 = time.time()
-        imgs = generate_images(spark, n_img, partitions=4 * cpus)
-        imgs.write.mode("overwrite").parquet("/tmp/proj_spark_bench/_payload_lane")
-        img_lane["encode_sec"] = round(time.time() - t0, 3)
-        t0 = time.time()
-        stored = spark.read.parquet("/tmp/proj_spark_bench/_payload_lane")
-        ok = (
-            verify_payloads(stored)
-            .agg(BF.sum(BF.when(BF.col("caption_ok") & BF.col("pixels_ok"), 1).otherwise(0)))
-            .collect()[0][0]
-        )
-        img_lane["decode_verify_sec"] = round(time.time() - t0, 3)
-        img_lane["n_images"] = n_img
-        img_lane["n_verified_ok"] = int(ok)
-        img_lane["decode_rows_per_sec"] = round(n_img / img_lane["decode_verify_sec"], 1)
+        img_lane = _payload_lane(spark, n_img, cpus, "/tmp/proj_spark_bench/_payload_lane")
     except Exception as exc:  # never fail the bench for the extra lane
         img_lane = {"error": str(exc)[:200]}
 
@@ -500,34 +521,8 @@ def run_benchmarks(cpus: int = CPUS) -> dict:
             os.environ.get("SPARK_GRAFT_BENCH_PAYLOADS_10X", str(10 * n_img))
         )
         if n_10x > 0:
-            from pyspark.sql import functions as BF
-
-            from proj_spark.sources.images import generate_images, verify_payloads
-
-            t0 = time.time()
-            imgs10 = generate_images(spark, n_10x, partitions=4 * cpus)
-            imgs10.write.mode("overwrite").parquet(
-                "/tmp/proj_spark_bench/_payload_lane_10x"
-            )
-            img_lane_10x["encode_sec"] = round(time.time() - t0, 3)
-            t0 = time.time()
-            stored10 = spark.read.parquet("/tmp/proj_spark_bench/_payload_lane_10x")
-            ok10 = (
-                verify_payloads(stored10)
-                .agg(
-                    BF.sum(
-                        BF.when(
-                            BF.col("caption_ok") & BF.col("pixels_ok"), 1
-                        ).otherwise(0)
-                    )
-                )
-                .collect()[0][0]
-            )
-            img_lane_10x["decode_verify_sec"] = round(time.time() - t0, 3)
-            img_lane_10x["n_images"] = n_10x
-            img_lane_10x["n_verified_ok"] = int(ok10)
-            img_lane_10x["decode_rows_per_sec"] = round(
-                n_10x / img_lane_10x["decode_verify_sec"], 1
+            img_lane_10x = _payload_lane(
+                spark, n_10x, cpus, "/tmp/proj_spark_bench/_payload_lane_10x"
             )
             if img_lane.get("decode_rows_per_sec"):
                 img_lane_10x["rate_vs_base_lane"] = round(
@@ -632,13 +627,9 @@ def run_benchmarks(cpus: int = CPUS) -> dict:
     # carries their throughput without disturbing the suite bands.
     overlay_lane: dict[str, float] = {}
     try:
-        import __spark_entry__ as _entry
-
-        lane_qs = ("bbox_overlay", "interval_join", "diameter")
-        reg = _entry.queries()
-        for qn in lane_qs:
+        for qn in ("bbox_overlay", "interval_join", "diameter"):
             t0 = time.time()
-            n = reg[qn](spark, SF_DIR).count()
+            n = _sink(qs[qn](spark, SF_DIR))
             overlay_lane[qn + "_sec"] = round(time.time() - t0, 3)
             overlay_lane[qn + "_rows"] = n
     except Exception as exc:
@@ -690,73 +681,43 @@ def run_benchmarks(cpus: int = CPUS) -> dict:
     return result
 
 
-def run_flagship_cluster(
-    n_executors: int, cores: int = 4, mem_mb: int = 6144, n_images: int | None = None
-) -> dict:
+def _cluster_session(app: str, n_executors: int, cores: int):
+    from proj_spark.session import build_session
+
+    spark = build_session(app, cpus=cores, executors=n_executors)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def _split_bytes(src_dir: str, n_tasks: int, floor: int) -> int:
+    """spark.sql.files.maxPartitionBytes for ~``n_tasks`` scan tasks over
+    the parquet files in ``src_dir``, clamped to [floor, 1 GB]."""
+    try:
+        tot = sum(
+            os.path.getsize(os.path.join(src_dir, f))
+            for f in os.listdir(src_dir)
+            if f.endswith(".parquet")
+        )
+    except OSError:
+        tot = 0
+    return min(max(tot // n_tasks or (128 << 20), floor), 1 << 30)
+
+
+def run_flagship_cluster(n_executors: int, cores: int = 4, n_images: int | None = None) -> dict:
     """Flagship throughput on a real multi-executor local cluster
     (separate executor JVMs + netty shuffle — the faithful sandbox
     stand-in for the north rule's N vs 4N executor criterion; plain
     local[k] shares one JVM whose shuffle machinery stops scaling
-    past ~8 threads).
-
-    Each executor JVM is pinned to its core budget
-    (-XX:ActiveProcessorCount): without it every executor sizes its
-    GC/JIT pools for the whole machine and 8 JVMs oversubscribe the
-    box, inverting the scaling measurement."""
-    import time
-
-    from pyspark.sql import SparkSession
-
+    past ~8 threads).  Executor JVMs are pinned to their core budget
+    by the session factory."""
     if n_images is None:
         n_images = N_IMAGES
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    os.environ.setdefault("PYTHONPATH", os.path.dirname(os.path.abspath(__file__)))
-
-    # Size input splits to the run: ~4 scan tasks per core, clamped to
-    # [32 MB, 1 GB].  The default 128 MB split on the 42 GB wide table
-    # produced 384 map tasks of ~42k rows each — per-task partial
-    # aggregates then carry nearly one row per input row (no map-side
-    # compression at all) and the tile rollup exchange degenerates to a
-    # full-data shuffle; measured at 4N this knob alone cut the z11
-    # aggregate from 6.1 s to 1.7 s.  At 10^12 rows the equivalent is
-    # sizing spark.sql.files.maxPartitionBytes so a map task covers
-    # enough rows to saturate the distinct-tile cap.
-    spark = (
-        SparkSession.builder.master(f"local-cluster[{n_executors},{cores},{mem_mb}]")
-        .appName("proj-spark-scaling")
-        .config("spark.sql.shuffle.partitions", str(4 * n_executors * cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", "8g")
-        .config("spark.executor.memory", f"{mem_mb}m")
-        .config(
-            "spark.executor.extraJavaOptions",
-            f"-XX:ParallelGCThreads={cores} -XX:CICompilerCount=2 "
-            f"-XX:ActiveProcessorCount={cores}",
-        )
-        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.abspath(__file__)))
-        .config("spark.ui.enabled", "false")
-        # single-box local-cluster: never trade a free slot for locality
-        .config("spark.locality.wait", "0s")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _cluster_session("proj-spark-scaling", n_executors, cores)
     # fixture tables (untimed): ensure the run's layout exists before
     # timing (the 42 GB wide table is only materialized for the wide
     # regime — at 64M+ rows it no longer fits disk and the unclustered
     # point view is the wide-scan-equivalent fixture)
-    if FLAGSHIP_TABLE == "wide":
-        _image_table(spark, n_images)
-        _pts_table(spark, n_images)
-    elif FLAGSHIP_TABLE == "unclustered":
-        _pts_uncl_table(spark, n_images)
-    else:
-        _pts_table(spark, n_images)
+    imgs = _FLAGSHIP_SOURCE(spark, n_images).select("image_id", "lon", "lat")
 
     # Size input splits to the run: ~4 scan tasks per core, clamped to
     # [32 MB, 1 GB].  The default 128 MB split on the 42 GB wide table
@@ -767,31 +728,20 @@ def run_flagship_cluster(
     # aggregate from 6.1 s to 1.7 s.  At 10^12 rows the equivalent is
     # sizing maxPartitionBytes so one map task covers enough rows to
     # saturate the distinct-tile cap (map-side combine does the rest).
-    src_dir = {
-        "wide": _img_cache(n_images),
-        "unclustered": _pts_uncl_cache(n_images),
-    }.get(FLAGSHIP_TABLE, _pts_cache(n_images))
-    try:
-        tot = sum(
-            os.path.getsize(os.path.join(src_dir, f))
-            for f in os.listdir(src_dir)
-            if f.endswith(".parquet")
-        )
-    except OSError:
-        tot = 0
-    split = min(max(tot // (4 * n_executors * cores) or (128 << 20), 32 << 20), 1 << 30)
+    split = _split_bytes(_FLAGSHIP_CACHE(n_images), 4 * n_executors * cores, 32 << 20)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(int(split)))
     # warm-up: python workers + codegen on every executor
-    from pyspark.sql import functions as WF
+    from pyspark.sql import functions as F
 
-    from proj_spark.functions.transform import transform as _wt
+    from proj_spark.functions.transform import transform as _t
+    from proj_spark.operators.gridshift import make_synthetic_grid, register_grid
 
     warm = spark.range(50000, numPartitions=n_executors * cores).select(
-        (WF.col("id") % 360 - 180.0).cast("double").alias("lon"),
-        (WF.col("id") % 120 - 60.0).cast("double").alias("lat"),
+        (F.col("id") % 360 - 180.0).cast("double").alias("lon"),
+        (F.col("id") % 120 - 60.0).cast("double").alias("lat"),
     )
-    _wt(warm, "+proj=latlong +datum=WGS84", "+proj=merc +datum=WGS84", "lon", "lat").agg(
-        WF.sum("x")
+    _t(warm, "+proj=latlong +datum=WGS84", "+proj=merc +datum=WGS84", "lon", "lat").agg(
+        F.sum("x")
     ).collect()
     _warm_map_in_pandas(spark, n_executors * cores)
 
@@ -801,16 +751,7 @@ def run_flagship_cluster(
     # contend for shared disk/loopback/memory bandwidth, which a real
     # N->4N cluster scales along with the cores; the narrow stage is
     # the contention-free scaling signal.
-    from proj_spark.functions.transform import transform as _t
-    from proj_spark.operators.gridshift import make_synthetic_grid, register_grid
-
     register_grid("conus_syn", make_synthetic_grid())
-    if FLAGSHIP_TABLE == "wide":
-        imgs = _image_table(spark, n_images).select("image_id", "lon", "lat")
-    elif FLAGSHIP_TABLE == "unclustered":
-        imgs = _pts_uncl_table(spark, n_images).select("image_id", "lon", "lat")
-    else:
-        imgs = _pts_table(spark, n_images).select("image_id", "lon", "lat")
     shifted = _t(
         imgs,
         "+proj=latlong +ellps=clrk66 +nadgrids=conus_syn",
@@ -818,11 +759,9 @@ def run_flagship_cluster(
         "lon",
         "lat",
     )
-    from pyspark.sql import functions as NF
-
-    shifted.limit(10000).agg(NF.sum("x")).collect()  # warm
+    shifted.limit(10000).agg(F.sum("x")).collect()  # warm
     t0 = time.time()
-    shifted.agg(NF.sum("x")).collect()
+    shifted.agg(F.sum("x")).collect()
     dt_narrow = time.time() - t0
 
     t0 = time.time()
@@ -841,7 +780,7 @@ def run_flagship_cluster(
     }
 
 
-def run_compute_probe(n_executors: int, n_rows: int, cores: int = 4, mem_mb: int = 6144) -> dict:
+def run_compute_probe(n_executors: int, n_rows: int, cores: int = 4) -> dict:
     """Pure-compute scaling probe: the SAME datum-transform pandas UDF
     as the flagship's narrow stage, but over spark.range — no parquet
     scan, no shuffle, no disk.  Rows are synthesized in-executor, so
@@ -849,32 +788,9 @@ def run_compute_probe(n_executors: int, n_rows: int, cores: int = 4, mem_mb: int
     itself.  If this scales ~1.0 while the scan-fed narrow stage does
     not, the gap IS the single box's IO/memory-bandwidth ceiling (a
     per-node resource a real N->4N cluster multiplies), not the plan."""
-    import time
-
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    spark = (
-        SparkSession.builder.master(f"local-cluster[{n_executors},{cores},{mem_mb}]")
-        .appName("proj-spark-compute-probe")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"))
-        .config("spark.driver.memory", "8g")
-        .config("spark.executor.memory", f"{mem_mb}m")
-        .config(
-            "spark.executor.extraJavaOptions",
-            f"-XX:ParallelGCThreads={cores} -XX:CICompilerCount=2 "
-            f"-XX:ActiveProcessorCount={cores}",
-        )
-        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.abspath(__file__)))
-        .config("spark.ui.enabled", "false")
-        .config("spark.locality.wait", "0s")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _cluster_session("proj-spark-compute-probe", n_executors, cores)
     from proj_spark.functions.transform import transform as _t
     from proj_spark.operators.gridshift import make_synthetic_grid, register_grid
 
@@ -908,9 +824,7 @@ def run_compute_probe(n_executors: int, n_rows: int, cores: int = 4, mem_mb: int
     }
 
 
-def run_shuffle_cluster(
-    n_executors: int, n_docs: int, cores: int = 1, mem_mb: int = 6144
-) -> dict:
+def run_shuffle_cluster(n_executors: int, n_docs: int, cores: int = 1) -> dict:
     """Shuffle-bound scaling probe (round-3 verdict task 4): the
     minhash-LSH near-dup pair pipeline — tokenize -> 3-shingle
     (explode) -> algebraic min signatures (groupBy) -> banded bucket
@@ -923,33 +837,9 @@ def run_shuffle_cluster(
     (no scan): ~40 tokens/doc from a 50k vocabulary, with every
     id%7==1 doc an exact clone of its predecessor so LSH buckets have
     real collisions to join."""
-    import time
-
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    spark = (
-        SparkSession.builder.master(f"local-cluster[{n_executors},{cores},{mem_mb}]")
-        .appName("proj-spark-shuffle-scaling")
-        .config("spark.sql.shuffle.partitions", str(4 * n_executors * cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.executor.memory", f"{mem_mb}m")
-        .config(
-            "spark.executor.extraJavaOptions",
-            f"-XX:ParallelGCThreads={cores} -XX:CICompilerCount=2 "
-            f"-XX:ActiveProcessorCount={cores}",
-        )
-        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.abspath(__file__)))
-        .config("spark.ui.enabled", "false")
-        .config("spark.locality.wait", "0s")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _cluster_session("proj-spark-shuffle-scaling", n_executors, cores)
     from proj_spark.operators.dedup import (
         minhash_lsh_pairs,
         minhash_signatures,
@@ -991,9 +881,7 @@ def run_shuffle_cluster(
     }
 
 
-def run_warp_cluster(
-    n_executors: int, side_px: int, cores: int = 1, mem_mb: int = 6144
-) -> dict:
+def run_warp_cluster(n_executors: int, side_px: int, cores: int = 1) -> dict:
     """Raster-warp scaling probe (round 4): reproject a side_px²
     plate-carrée raster onto web-mercator tiles at N vs 4N one-core
     executors.  Fourth leg of the scaling evidence — a MIXED plan
@@ -1001,11 +889,8 @@ def run_warp_cluster(
     Python kernel), the shape of the new raster operators
     (warp/chips/composite/pyramid).  Source staged once, untimed;
     both cluster sizes read the SAME parquet."""
-    import time
-
-    from pyspark.sql import SparkSession
-
     from proj_spark.operators.warp import LatLonGrid, lcg_tiles, warp_to_webmerc
+    from proj_spark.session import build_session
 
     grid = LatLonGrid(
         lon0=-120.0, lat0=48.0, dlon=0.005, dlat=0.005,
@@ -1016,38 +901,11 @@ def run_warp_cluster(
     )
     cache = f"/tmp/proj_spark_bench/warp_scale_{side_px}"
     if not os.path.exists(os.path.join(cache, "_SUCCESS")):
-        active = SparkSession.getActiveSession()
-        if active is not None:
-            active.stop()
-        stage = (
-            SparkSession.builder.master(f"local[{CPUS}]")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate()
-        )
+        # the cluster session below replaces (stops) this local one
+        stage = build_session("proj-spark-warp-stage", cpus=CPUS)
         lcg_tiles(stage, grid, partitions=64).write.mode("overwrite").parquet(cache)
-        stage.stop()
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    spark = (
-        SparkSession.builder.master(f"local-cluster[{n_executors},{cores},{mem_mb}]")
-        .appName("proj-spark-warp-scaling")
-        .config("spark.sql.shuffle.partitions", str(4 * n_executors * cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.executor.memory", f"{mem_mb}m")
-        .config(
-            "spark.executor.extraJavaOptions",
-            f"-XX:ParallelGCThreads={cores} -XX:CICompilerCount=2 "
-            f"-XX:ActiveProcessorCount={cores}",
-        )
-        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.abspath(__file__)))
-        .config("spark.ui.enabled", "false")
-        .config("spark.locality.wait", "0s")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _cluster_session("proj-spark-warp-scaling", n_executors, cores)
     tiles = spark.read.parquet(cache)
 
     warp_to_webmerc(spark, tiles, grid, zoom=zoom, out_px=64).count()  # warm
@@ -1067,13 +925,7 @@ def run_warp_cluster(
     }
 
 
-def _payload_cache(n_images: int) -> str:
-    return f"/tmp/proj_spark_bench/payload_scale_{n_images}"
-
-
-def run_payload_cluster(
-    n_executors: int, n_images: int, cores: int = 1, mem_mb: int = 6144
-) -> dict:
+def run_payload_cluster(n_executors: int, n_images: int, cores: int = 1) -> dict:
     """Decode-bound scaling probe: the metric's PSNR>=40 payload gate
     (decode every PNG/JPEG + pixel allclose + caption equality) at N
     vs 4N one-core executors.  Third leg of the scaling triad — the
@@ -1083,22 +935,13 @@ def run_payload_cluster(
     ingest spends most of its cycles in.  Input staged once, untimed,
     by an ordinary local session; both cluster sizes read the SAME
     parquet."""
-    import time
+    from proj_spark.session import build_session
+    from proj_spark.sources.images import generate_images
 
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    from proj_spark.sources.images import generate_images, verify_payloads
-
-    cache = _payload_cache(n_images)
+    cache = f"/tmp/proj_spark_bench/payload_scale_{n_images}"
     if not os.path.exists(os.path.join(cache, "_SUCCESS")):
-        stage = (
-            SparkSession.builder.master(f"local[{CPUS}]")
-            .config("spark.driver.memory", "16g")
-            .config("spark.ui.enabled", "false")
-            .appName("payload-scaling-stage")
-            .getOrCreate()
-        )
+        # the cluster session below replaces (stops) this local one
+        stage = build_session("payload-scaling-stage", cpus=CPUS)
         stage.sparkContext.setLogLevel("ERROR")
         # constant images/file across fixture sizes, so per-task load
         # (and per-task overhead share) is identical at every scale —
@@ -1107,58 +950,20 @@ def run_payload_cluster(
         generate_images(stage, n_images, partitions=parts).write.mode(
             "overwrite"
         ).parquet(cache)
-        stage.stop()
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    spark = (
-        SparkSession.builder.master(f"local-cluster[{n_executors},{cores},{mem_mb}]")
-        .appName("proj-spark-payload-scaling")
-        .config("spark.sql.shuffle.partitions", str(4 * n_executors * cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.executor.memory", f"{mem_mb}m")
-        .config(
-            "spark.executor.extraJavaOptions",
-            f"-XX:ParallelGCThreads={cores} -XX:CICompilerCount=2 "
-            f"-XX:ActiveProcessorCount={cores}",
-        )
-        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.abspath(__file__)))
-        .config("spark.ui.enabled", "false")
-        .config("spark.locality.wait", "0s")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _cluster_session("proj-spark-payload-scaling", n_executors, cores)
     # split sizing: >= 4 decode tasks per core so every slot stays busy
-    try:
-        tot = sum(
-            os.path.getsize(os.path.join(cache, f))
-            for f in os.listdir(cache)
-            if f.endswith(".parquet")
-        )
-    except OSError:
-        tot = 0
-    split = min(max(tot // (4 * n_executors * cores) or (128 << 20), 1 << 20), 1 << 30)
+    split = _split_bytes(cache, 4 * n_executors * cores, 1 << 20)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(int(split)))
 
     stored = spark.read.parquet(cache)
-
-    def gate(df) -> int:
-        return int(
-            verify_payloads(df)
-            .agg(F.sum(F.when(F.col("caption_ok") & F.col("pixels_ok"), 1).otherwise(0)))
-            .collect()[0][0]
-        )
-
     # steady-state: a limit()-based warm executes on ONE task, leaving
     # the other executors' python workers to pay numpy/codec import
     # inside the timed run (~1-2 s each, 10%+ of the 4N wall).  One
     # untimed full pass warms every slot; the second pass is measured.
-    gate(stored)
+    _n_verified(stored)
     t0 = time.time()
-    n_ok = gate(stored)
+    n_ok = _n_verified(stored)
     dt = time.time() - t0
     spark.stop()
     return {
@@ -1195,28 +1000,15 @@ def run_skew_demo(n_rows: int, cpus: int = CPUS) -> dict:
                 runtime re-plan splits the oversized partition
 
     All three must agree on the aggregate (asserted)."""
-    import time
-
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from proj_spark.functions import expressions as E
     from proj_spark.operators.skew import salted_broadcast_join
+    from proj_spark.session import build_session
 
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("proj-spark-skew-demo")
-        .config("spark.sql.shuffle.partitions", str(2 * cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = build_session("proj-spark-skew-demo", cpus=cpus, shuffle_partitions=2 * cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     big = _pts_uncl_table(spark, n_rows).withColumn(
         "cell", E.cell_id("lon", "lat", 8)
@@ -1296,192 +1088,156 @@ def run_skew_demo(n_rows: int, cpus: int = CPUS) -> dict:
     }
 
 
+
+def _efficiency(lo: dict, hi: dict, rate_key: str) -> float:
+    """Throughput ratio per core ratio: 1.0 is perfect scaling."""
+    ratio = hi["total_cores"] / lo["total_cores"]
+    return round((hi[rate_key] / lo[rate_key]) / ratio, 3)
+
+
+def run_pair(n_lo: int, runner, rate_key: str, lo_kw: dict, hi_kw: dict) -> dict:
+    """One N-vs-4N scaling pair: ``runner`` at ``n_lo`` and at
+    ``4 * n_lo`` executors, and the scaling efficiency of ``rate_key``."""
+    lo = runner(n_lo, **lo_kw)
+    hi = runner(4 * n_lo, **hi_kw)
+    return {
+        "n_executors": lo,
+        "4n_executors": hi,
+        "scaling_efficiency": _efficiency(lo, hi, rate_key),
+    }
+
+
+def _env_int(name: str, default: int) -> int:
+    return int(os.environ.get(name, str(default)))
+
+
+def _pair_modes() -> dict:
+    """SPARK_GRAFT_SCALING mode -> (metric text, runner, rate key, N-leg
+    kwargs, 4N-leg kwargs).  Sizes come from the environment, as in the
+    repro lines of BENCH_SCALING.json; a weak form grows the input with
+    the executors (constant per-executor load, the 100 TB model)."""
+    def cores(default: int) -> int:
+        return _env_int("SPARK_GRAFT_SCALE_CORES", default)
+
+    docs = {"n_docs": _env_int("SPARK_GRAFT_SHUFFLE_DOCS", 1000000), "cores": cores(1)}
+    # pure-python decode runs ~110 images/s/core on this box: 8000
+    # images puts the N=1 leg at ~70 s wall (same measurement scale
+    # as the flagship criterion pair)
+    imgs = {"n_images": _env_int("SPARK_GRAFT_PAYLOAD_IMAGES", 8000), "cores": cores(1)}
+    side = _env_int("SPARK_GRAFT_WARP_SIDE", 8192)
+    warp_weak = os.environ.get("SPARK_GRAFT_WARP_WEAK") == "1"
+    rows = {"n_rows": _env_int("SPARK_GRAFT_PROBE_ROWS", N_IMAGES), "cores": 4}
+    weak = os.environ.get("SPARK_GRAFT_SCALE_MODE", "strong") == "weak"
+    return {
+        "shuffle": (
+            "minhash-LSH near-dup pairs docs/sec at N vs 4N executors (shuffle-bound wide plan, local-cluster)",
+            run_shuffle_cluster, "docs_per_sec", docs, docs,
+        ),
+        "payload": (
+            "payload decode+PSNR-gate images/sec at N vs 4N executors "
+            "(Python-decode-bound plan, local-cluster)",
+            run_payload_cluster, "images_per_sec", imgs, imgs,
+        ),
+        "warp": (
+            "raster-warp output px/sec at N vs 4N executors "
+            "(mixed broadcast-join + bounded-group-shuffle + "
+            "fused Python kernel, local-cluster)",
+            run_warp_cluster, "out_px_per_sec",
+            {"side_px": side, "cores": cores(1)},
+            {"side_px": 2 * side if warp_weak else side, "cores": cores(1)},
+        ),
+        "compute": (
+            "pure-compute probe rows/sec at N vs 4N executors (no scan, no shuffle)",
+            run_compute_probe, "rows_per_sec", rows, rows,
+        ),
+        "cluster": (
+            "flagship rows/sec at N vs 4N executors (local-cluster, "
+            + ("weak scaling: rows grow with executors)" if weak else "strong scaling: fixed input)"),
+            run_flagship_cluster, "rows_per_sec",
+            {"n_images": N_IMAGES // 4 if weak else N_IMAGES, "cores": cores(4)},
+            {"n_images": N_IMAGES, "cores": cores(4)},
+        ),
+    }
+
+
+def headline(record: dict) -> str:
+    """The compact last stdout line (at most ~1.5 KB).  The round
+    artifacts (BENCH_r0N.json) keep only the last 2000 characters of
+    stdout, which the one-line full record outgrew in round 5."""
+    keys = ("metric", "value", "unit", "sf", "cpus", "rows_per_sec", "queries", "sf1_queries", "scaling")
+    head = {k: record[k] for k in keys if k in record}
+    head["sentinel_rows_per_sec"] = record.get("box_sentinel", {}).get("rows_per_sec")
+    return json.dumps(head, separators=(",", ":"))
+
+
+def _emit(record: dict) -> None:
+    """Write the full record to a sidecar, print its path, then the headline."""
+    os.makedirs("/tmp/proj_spark_bench", exist_ok=True)
+    path = time.strftime("/tmp/proj_spark_bench/bench_%Y%m%dT%H%M%S.json")
+    with open(path, "w") as f:
+        json.dump(record, f, indent=1)
+    print(f"full record: {path}")
+    print(headline(record))
+
+
 def main():
     scaling = os.environ.get("SPARK_GRAFT_SCALING")
-    if scaling == "skew":
-        n_rows = int(os.environ.get("SPARK_GRAFT_SKEW_ROWS", "32000000"))
-        print(json.dumps(run_skew_demo(n_rows)))
-        return
-    if scaling == "shuffle":
-        n_lo = int(os.environ.get("SPARK_GRAFT_SCALE_N", "1"))
-        n_docs = int(os.environ.get("SPARK_GRAFT_SHUFFLE_DOCS", "1000000"))
-        cores = int(os.environ.get("SPARK_GRAFT_SCALE_CORES", "1"))
-        lo = run_shuffle_cluster(n_lo, n_docs, cores=cores)
-        hi = run_shuffle_cluster(4 * n_lo, n_docs, cores=cores)
-        ratio = hi["total_cores"] / lo["total_cores"]
-        print(
-            json.dumps(
-                {
-                    "metric": "minhash-LSH near-dup pairs docs/sec at N vs 4N executors (shuffle-bound wide plan, local-cluster)",
-                    "n_executors": lo,
-                    "4n_executors": hi,
-                    "scaling_efficiency": round(
-                        (hi["docs_per_sec"] / lo["docs_per_sec"]) / ratio, 3
-                    ),
-                }
-            )
-        )
-        return
-    if scaling == "payload":
-        n_lo = int(os.environ.get("SPARK_GRAFT_SCALE_N", "1"))
-        # pure-python decode runs ~110 images/s/core on this box: 8000
-        # images puts the N=1 leg at ~70 s wall (same measurement scale
-        # as the flagship criterion pair)
-        n_images = int(os.environ.get("SPARK_GRAFT_PAYLOAD_IMAGES", "8000"))
-        cores = int(os.environ.get("SPARK_GRAFT_SCALE_CORES", "1"))
-        lo = run_payload_cluster(n_lo, n_images, cores=cores)
-        hi = run_payload_cluster(4 * n_lo, n_images, cores=cores)
-        ratio = hi["total_cores"] / lo["total_cores"]
-        print(
-            json.dumps(
-                {
-                    "metric": (
-                        "payload decode+PSNR-gate images/sec at N vs 4N executors "
-                        "(Python-decode-bound plan, local-cluster)"
-                    ),
-                    "n_executors": lo,
-                    "4n_executors": hi,
-                    "scaling_efficiency": round(
-                        (hi["images_per_sec"] / lo["images_per_sec"]) / ratio, 3
-                    ),
-                }
-            )
-        )
-        return
-    if scaling == "warp":
-        n_lo = int(os.environ.get("SPARK_GRAFT_SCALE_N", "1"))
-        side = int(os.environ.get("SPARK_GRAFT_WARP_SIDE", "8192"))
-        cores = int(os.environ.get("SPARK_GRAFT_SCALE_CORES", "1"))
-        # weak-scaling form: 4x the source pixels with 4x the executors
-        # at the SAME zoom (constant per-executor load, the faithful
-        # 100 TB model); strong form (default): same input both sizes
-        weak = os.environ.get("SPARK_GRAFT_WARP_WEAK") == "1"
-        hi_side = 2 * side if weak else side
-        lo = run_warp_cluster(n_lo, side, cores=cores)
-        hi = run_warp_cluster(4 * n_lo, hi_side, cores=cores)
-        ratio = hi["total_cores"] / lo["total_cores"]
-        print(
-            json.dumps(
-                {
-                    "metric": (
-                        "raster-warp output px/sec at N vs 4N executors "
-                        "(mixed broadcast-join + bounded-group-shuffle + "
-                        "fused Python kernel, local-cluster)"
-                    ),
-                    "n_executors": lo,
-                    "4n_executors": hi,
-                    "scaling_efficiency": round(
-                        (hi["out_px_per_sec"] / lo["out_px_per_sec"]) / ratio, 3
-                    ),
-                    "form": "weak (4x source px, fixed zoom)" if weak else "strong (fixed input)",
-                }
-            )
-        )
-        return
-    if scaling == "compute":
-        n_lo = int(os.environ.get("SPARK_GRAFT_SCALE_N", "1"))
-        n_rows = int(os.environ.get("SPARK_GRAFT_PROBE_ROWS", str(N_IMAGES)))
-        lo = run_compute_probe(n_lo, n_rows)
-        hi = run_compute_probe(4 * n_lo, n_rows)
-        ratio = hi["total_cores"] / lo["total_cores"]
-        print(
-            json.dumps(
-                {
-                    "metric": "pure-compute probe rows/sec at N vs 4N executors (no scan, no shuffle)",
-                    "n_executors": lo,
-                    "4n_executors": hi,
-                    "scaling_efficiency": round(
-                        (hi["rows_per_sec"] / lo["rows_per_sec"]) / ratio, 3
-                    ),
-                }
-            )
-        )
-        return
     sweep = os.environ.get("SPARK_GRAFT_SCALE_SWEEP")
-    if scaling == "cluster" and sweep:
+    modes = _pair_modes()
+    if scaling == "skew":
+        print(json.dumps(run_skew_demo(_env_int("SPARK_GRAFT_SKEW_ROWS", 32000000))))
+    elif scaling == "cluster" and sweep:
         # N-sweep: run every executor count and report the full
         # efficiency-vs-size curve (the evidence the single-pair ratio
         # cannot give: where the one-box bandwidth ceiling bites)
-        ns = [int(x) for x in sweep.split(",")]
-        cores = int(os.environ.get("SPARK_GRAFT_SCALE_CORES", "4"))
-        runs = [run_flagship_cluster(n, cores=cores) for n in ns]
+        cores = _env_int("SPARK_GRAFT_SCALE_CORES", 4)
+        runs = [run_flagship_cluster(int(n), cores=cores) for n in sweep.split(",")]
         base = runs[0]
-        curve = []
-        for r in runs:
-            ratio = r["total_cores"] / base["total_cores"]
-            curve.append(
-                {
-                    **r,
-                    "speedup_vs_n1": round(r["rows_per_sec"] / base["rows_per_sec"], 3),
-                    "efficiency_vs_n1": round(
-                        (r["rows_per_sec"] / base["rows_per_sec"]) / ratio, 3
-                    ),
-                    "narrow_efficiency_vs_n1": round(
-                        (r["narrow_rows_per_sec"] / base["narrow_rows_per_sec"]) / ratio, 3
-                    ),
-                }
+        curve = [
+            {
+                **r,
+                "speedup_vs_n1": round(r["rows_per_sec"] / base["rows_per_sec"], 3),
+                "efficiency_vs_n1": _efficiency(base, r, "rows_per_sec"),
+                "narrow_efficiency_vs_n1": _efficiency(base, r, "narrow_rows_per_sec"),
+            }
+            for r in runs
+        ]
+        print(json.dumps({
+            "metric": "flagship rows/sec sweep over executor counts (local-cluster)",
+            "table": FLAGSHIP_TABLE,
+            "n_images": N_IMAGES,
+            "sweep": curve,
+        }))
+    elif scaling in modes:
+        metric, runner, rate_key, lo_kw, hi_kw = modes[scaling]
+        pair = run_pair(_env_int("SPARK_GRAFT_SCALE_N", 1), runner, rate_key, lo_kw, hi_kw)
+        out = {"metric": metric, **pair}
+        if scaling == "warp":
+            weak = lo_kw["side_px"] != hi_kw["side_px"]
+            out["form"] = "weak (4x source px, fixed zoom)" if weak else "strong (fixed input)"
+        if scaling == "cluster":
+            out["value"] = pair["4n_executors"]["wall_sec"]
+            out["unit"] = "sec"
+            out["sf"] = SF_DIR.rstrip("/").split("sf")[-1]
+            out["scaling_efficiency_narrow_stage"] = _efficiency(
+                pair["n_executors"], pair["4n_executors"], "narrow_rows_per_sec"
             )
-        print(
-            json.dumps(
-                {
-                    "metric": "flagship rows/sec sweep over executor counts (local-cluster)",
-                    "table": FLAGSHIP_TABLE,
-                    "n_images": N_IMAGES,
-                    "sweep": curve,
-                }
-            )
-        )
-        return
-    if scaling == "cluster":
-        n_lo = int(os.environ.get("SPARK_GRAFT_SCALE_N", "1"))
-        # SPARK_GRAFT_SCALE_MODE=weak: constant per-executor load — N
-        # executors on n/4 rows vs 4N executors on n rows.  This is the
-        # faithful sandbox model of the 100 TB question ("same job, 4x
-        # the data, 4x the executors"): a 10^12-row job never strong-
-        # scales a fixed toy input until fixed costs dominate; each
-        # executor keeps the same slice.  Efficiency formula is shared
-        # with the strong pair because rows_per_sec normalizes n.
-        mode = os.environ.get("SPARK_GRAFT_SCALE_MODE", "strong")
-        lo_images = N_IMAGES // 4 if mode == "weak" else N_IMAGES
-        cores = int(os.environ.get("SPARK_GRAFT_SCALE_CORES", "4"))
-        lo = run_flagship_cluster(n_lo, cores=cores, n_images=lo_images)
-        hi = run_flagship_cluster(4 * n_lo, cores=cores, n_images=N_IMAGES)
-        ratio = hi["total_cores"] / lo["total_cores"]
-        eff = (hi["rows_per_sec"] / lo["rows_per_sec"]) / ratio
-        eff_narrow = (hi["narrow_rows_per_sec"] / lo["narrow_rows_per_sec"]) / ratio
-        print(
-            json.dumps(
-                {
-                    "metric": (
-                        "flagship rows/sec at N vs 4N executors (local-cluster, "
-                        + ("weak scaling: rows grow with executors)" if mode == "weak" else "strong scaling: fixed input)")
-                    ),
-                    "value": hi["wall_sec"],
-                    "unit": "sec",
-                    "sf": SF_DIR.rstrip("/").split("sf")[-1],
-                    "n_executors": lo,
-                    "4n_executors": hi,
-                    "scaling_efficiency": round(eff, 3),
-                    "scaling_efficiency_narrow_stage": round(eff_narrow, 3),
-                }
-            )
-        )
-        return
-    if scaling:
+        print(json.dumps(out))
+    elif scaling:
+        # SPARK_GRAFT_SCALING=8,32: the full bench at each local[k]
         levels = [int(x) for x in scaling.split(",")]
         runs = {c: run_benchmarks(c) for c in levels}
         lo, hi = min(levels), max(levels)
         tp = {c: runs[c]["rows_per_sec"] for c in levels}
-        eff = (tp[hi] / tp[lo]) / (hi / lo)
         out = runs[hi]
         out["scaling"] = {
             "levels": levels,
             "rows_per_sec": tp,
-            "efficiency": round(eff, 3),
+            "efficiency": round((tp[hi] / tp[lo]) / (hi / lo), 3),
         }
-        print(json.dumps(out))
-        return
-    print(json.dumps(run_benchmarks()))
+        _emit(out)
+    else:
+        _emit(run_benchmarks())
 
 
 if __name__ == "__main__":

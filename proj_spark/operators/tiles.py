@@ -91,21 +91,3 @@ def tile_counts(
         .select(F.col("zoom").cast("int").alias("zoom"), "tile_x", "tile_y", "n")
     )
 
-
-def tile_bounds(zoom_col: str = "zoom", tx: str = "tile_x", ty: str = "tile_y"):
-    """Column expressions for a tile's lon/lat bounds (slippy-map
-    inverse: west = tx/n*360-180, north = atan(sinh(pi*(1-2*ty/n)))).
-    Returns dict of Columns usable in select()."""
-    n = F.pow(F.lit(2.0), F.col(zoom_col).cast("double"))
-
-    def _lat(yy):
-        t = F.lit(3.141592653589793) * (1.0 - 2.0 * yy / n)
-        # atan(sinh(t)) via log-free built-ins
-        return F.degrees(F.atan((F.exp(t) - F.exp(-t)) / 2.0))
-
-    return {
-        "west": F.col(tx) / n * 360.0 - 180.0,
-        "east": (F.col(tx) + 1) / n * 360.0 - 180.0,
-        "north": _lat(F.col(ty).cast("double")),
-        "south": _lat(F.col(ty).cast("double") + 1.0),
-    }

@@ -76,12 +76,9 @@ def test_never_all_pairs_plan(spark, pts):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_ring_guard():
+def test_ring_guard(spark):
     """A max_dist needing an oversized ring raises instead of silently
     under-covering."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
     pts = spark.range(1, 10).select(
         F.col("id").alias("pk"),
         F.lit(0.0).alias("lon"),

@@ -8,6 +8,7 @@ for Spark's ``bigint`` ``int``.  Usage: python tools/check_oracle.py [name ...]
 """
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
@@ -28,17 +29,13 @@ def norm(v):
 
 def main():
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from proj_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    # sf0.01 fits an 8g heap; the factory's 16g default can outgrow a 16 GB box
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
+    spark = build_session("proj-spark-oracle-check", cpus=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

@@ -90,17 +90,13 @@ def run(spark, zoom: int, tp: int) -> dict:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from proj_spark.session import build_session
 
     zoom = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     tp = int(sys.argv[2]) if len(sys.argv) > 2 else 16
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .appName("proj-spark-aoi-clip")
-        .getOrCreate()
+    spark = build_session(
+        "proj-spark-aoi-clip", cpus=cpus, shuffle_partitions=max(2 * cpus, 8)
     )
     spark.sparkContext.setLogLevel("ERROR")
     print(json.dumps(run(spark, zoom, tp)))

@@ -233,21 +233,13 @@ def run(spark, n_images: int, out_dir: str) -> dict:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from proj_spark.session import build_session
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     out = sys.argv[2] if len(sys.argv) > 2 else tempfile.mkdtemp(prefix="img_funnel_")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        # local mode: driver heap IS the executor heap; the fixture's
-        # degenerate phash groups (one shared gradient base) make the
-        # pair join clique-shaped, so give it real memory
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .appName("proj-spark-image-funnel")
-        .getOrCreate()
+    spark = build_session(
+        "proj-spark-image-funnel", cpus=cpus, shuffle_partitions=max(2 * cpus, 8)
     )
     spark.sparkContext.setLogLevel("ERROR")
     out_line = run(spark, n, out)

@@ -114,14 +114,13 @@ def run(spark, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from proj_spark.session import build_session
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("proj-spark-curation-pipeline")
-        .getOrCreate()
+    spark = build_session(
+        "proj-spark-curation-pipeline",
+        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+        shuffle_partitions=8,
     )
     try:
         summary = run(spark, sf_dir)

@@ -127,17 +127,11 @@ def run(spark, side: int, tp: int) -> dict:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from proj_spark.session import build_session
 
     side = int(sys.argv[1]) if len(sys.argv) > 1 else 6
     tp = int(sys.argv[2]) if len(sys.argv) > 2 else 64
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("example-scene-pipeline")
-        .getOrCreate()
-    )
+    spark = build_session("example-scene-pipeline", cpus=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     print(json.dumps(run(spark, side, tp)))
     spark.stop()

@@ -60,7 +60,6 @@ def synth_docs(spark, n: int, parts: int):
 
 
 def run_worker(root: str, n_docs: int, crash_stage: str | None, cpus: int) -> dict:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from proj_spark.operators.checkpoint import CheckpointedPipeline
@@ -79,16 +78,12 @@ def run_worker(root: str, n_docs: int, crash_stage: str | None, cpus: int) -> di
         quality_score,
         scrub_pii,
     )
+    from proj_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(4 * cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        # local mode: driver heap IS the executor heap; the default 1g
-        # OOMs 32 concurrent tasks over a 10M-doc corpus
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .appName("proj-spark-resume-drill")
-        .getOrCreate()
+    # the 10M-doc drill needs SPARK_GRAFT_DRIVER_MEM=48g: in local mode
+    # the driver heap is the executor heap of 32 concurrent tasks
+    spark = build_session(
+        "proj-spark-resume-drill", cpus=cpus, shuffle_partitions=max(4 * cpus, 8)
     )
     spark.sparkContext.setLogLevel("ERROR")
     pipe = CheckpointedPipeline(spark, root, key_col="doc_id")

@@ -26,16 +26,9 @@ sys.path.insert(0, ROOT)
 def _sentinel() -> dict:
     """bench._box_sentinel in a throwaway local session."""
     import bench
-    from pyspark.sql import SparkSession
+    from proj_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{bench.CPUS}]")
-        .config("spark.sql.shuffle.partitions", str(bench.CPUS))
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .appName("box-sentinel")
-        .getOrCreate()
-    )
+    spark = build_session("box-sentinel", cpus=bench.CPUS, shuffle_partitions=bench.CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     try:
         return bench._box_sentinel(spark, bench.CPUS)

@@ -58,7 +58,6 @@ def _chip_boxes(grid) -> list:
 def run_worker(
     root: str, side: int, tp: int, zoom: int, crash_stage: str | None, cpus: int
 ) -> dict:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from proj_spark.operators.checkpoint import CheckpointedPipeline
@@ -66,14 +65,10 @@ def run_worker(
     from proj_spark.operators.composite import best_pixel_composite, lcg_observations
     from proj_spark.operators.stencil import sobel_tiles
     from proj_spark.operators.warp import warp_to_webmerc
+    from proj_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(4 * cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .appName("proj-spark-scene-resume-drill")
-        .getOrCreate()
+    spark = build_session(
+        "proj-spark-scene-resume-drill", cpus=cpus, shuffle_partitions=max(4 * cpus, 8)
     )
     spark.sparkContext.setLogLevel("ERROR")
     grid = _grid(side, tp)

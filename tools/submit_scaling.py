@@ -16,8 +16,8 @@ with throughput scaling efficiency >=0.8" — exercised literally:
 
 One-core executor pairs keep the measurement below the single box's
 shared-DRAM knee (see BASELINE.md "Reading the numbers"); executor
-JVMs are pinned with -XX:ActiveProcessorCount exactly as in
-bench.run_flagship_cluster.
+JVMs are pinned with -XX:ActiveProcessorCount exactly as in the
+session factory's cluster branch (proj_spark/session.py).
 
 Usage:  python tools/submit_scaling.py [n_images]   (default 128M)
 Prints one JSON line; callers append it to BENCH_SCALING.json.
@@ -57,15 +57,9 @@ def _stage_fixture(n_images: int) -> None:
 
     if os.path.exists(os.path.join(bench._pts_uncl_cache(n_images), "_SUCCESS")):
         return
-    from pyspark.sql import SparkSession
+    from proj_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{bench.CPUS}]")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .appName("scaling-fixture-stage")
-        .getOrCreate()
-    )
+    spark = build_session("scaling-fixture-stage", cpus=bench.CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     bench._pts_uncl_table(spark, n_images)
     spark.stop()
