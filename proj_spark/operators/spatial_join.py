@@ -43,10 +43,9 @@ def polygon_edges(polys: DataFrame, ring: str = "ring", poly_id: str = "poly_id"
     Adds ``poly_seq`` (zero-based input order — the first-match
     priority, analog of grid list position) if not present.
     """
+    seq = []
     if "poly_seq" not in polys.columns:
-        polys = polys.withColumn(
-            "poly_seq", F.row_number().over(Window.orderBy(poly_id)) - 1
-        )
+        seq = [(F.row_number().over(Window.orderBy(poly_id)) - 1).alias("poly_seq")]
     # edges i -> i+1 (ring is closed: last == first, so stop at n-2)
     edges = F.expr(
         f"transform(slice({ring}, 1, size({ring}) - 1), (v, i) -> "
@@ -55,14 +54,16 @@ def polygon_edges(polys: DataFrame, ring: str = "ring", poly_id: str = "poly_id"
     )
     lons = F.expr(f"transform({ring}, v -> v.lon)")
     lats = F.expr(f"transform({ring}, v -> v.lat)")
-    out = polys.withColumn("edges", edges)
-    out = (
-        out.withColumn("bbox_w", F.array_min(lons))
-        .withColumn("bbox_e", F.array_max(lons))
-        .withColumn("bbox_s", F.array_min(lats))
-        .withColumn("bbox_n", F.array_max(lats))
+    # one projection: every withColumn would re-analyze the lambdas
+    return polys.select(
+        "*",
+        *seq,
+        edges.alias("edges"),
+        F.array_min(lons).alias("bbox_w"),
+        F.array_max(lons).alias("bbox_e"),
+        F.array_min(lats).alias("bbox_s"),
+        F.array_max(lats).alias("bbox_n"),
     )
-    return out
 
 
 def polygon_cover(polys_edged: DataFrame, res: int) -> DataFrame:
@@ -75,60 +76,52 @@ def polygon_cover(polys_edged: DataFrame, res: int) -> DataFrame:
     two_n = 2 * n
 
     def ix_of(lon):
-        v = F.floor((lon + 180.0) / 360.0 * two_n)
+        v = F.floor((F.col(lon) + 180.0) / 360.0 * two_n)
         return F.least(F.greatest(v, F.lit(0)), F.lit(two_n - 1))
 
     def iy_of(lat):
-        v = F.floor((lat + 90.0) / 180.0 * n)
+        v = F.floor((F.col(lat) + 90.0) / 180.0 * n)
         return F.least(F.greatest(v, F.lit(0)), F.lit(n - 1))
 
-    df = (
-        polys_edged.withColumn("_ix0", ix_of(F.col("bbox_w")))
-        .withColumn("_ix1", ix_of(F.col("bbox_e")))
-        .withColumn("_iy0", iy_of(F.col("bbox_s")))
-        .withColumn("_iy1", iy_of(F.col("bbox_n")))
-    )
-    df = df.withColumn("_ix", F.explode(F.sequence("_ix0", "_ix1")))
-    df = df.withColumn("_iy", F.explode(F.sequence("_iy0", "_iy1")))
-    df = df.withColumn("cell", (F.col("_iy") * two_n + F.col("_ix")).cast("long"))
+    # one select per explode, then one for the outputs: each step
+    # re-analyzes the whole plan, lambdas included
+    cells = polys_edged.select(
+        "*", F.explode(F.sequence(ix_of("bbox_w"), ix_of("bbox_e"))).alias("_ix")
+    ).select("*", F.explode(F.sequence(iy_of("bbox_s"), iy_of("bbox_n"))).alias("_iy"))
 
     # classify each cover cell: fully inside the polygon (every point
     # in it is a hit — candidates skip the ray cast) vs boundary.
-    # Sound test: all 4 cell corners inside AND no edge's bbox
-    # intersects the cell (an edge crossing the cell would have an
-    # overlapping bbox, so the boundary cannot enter).  This runs on
-    # the SMALL cover table only; it is the S2-style interior/boundary
-    # covering split that makes refinement cost proportional to the
-    # boundary band, not the polygon area.
-    cell_w = F.col("_ix") * (360.0 / two_n) - 180.0
-    cell_e = (F.col("_ix") + 1) * (360.0 / two_n) - 180.0
-    cell_s = F.col("_iy") * (180.0 / n) - 90.0
-    cell_n_ = (F.col("_iy") + 1) * (180.0 / n) - 90.0
-    df = (
-        df.withColumn("_cw", cell_w)
-        .withColumn("_ce", cell_e)
-        .withColumn("_cs", cell_s)
-        .withColumn("_cn", cell_n_)
+    # Sound test: no edge meets the closed cell, so the boundary never
+    # enters it, AND one corner is inside by the ray cast.  An edge
+    # meets the cell when their bboxes overlap and the 4 corners are
+    # not all strictly on one side of the edge's line; the side test's
+    # margin (1e-9 deg of distance) can only make fewer cells full.
+    # This runs on the SMALL cover table only; it is the S2-style
+    # interior/boundary covering split that makes refinement cost
+    # proportional to the boundary band, not the polygon area.
+    dx, dy = 360.0 / two_n, 180.0 / n
+    cw, ce = f"(_ix * {dx!r}D - 180.0D)", f"((_ix + 1) * {dx!r}D - 180.0D)"
+    cs, cn = f"(_iy * {dy!r}D - 90.0D)", f"((_iy + 1) * {dy!r}D - 90.0D)"
+    corners = [(cw, cs), (cw, cn), (ce, cs), (ce, cn)]
+    side = ", ".join(
+        f"(e.x2 - e.x1) * ({y} - e.y1) - (e.y2 - e.y1) * ({x} - e.x1)" for x, y in corners
     )
-    corner_in = [
-        _inside_expr("_cw", "_cs"),
-        _inside_expr("_cw", "_cn"),
-        _inside_expr("_ce", "_cs"),
-        _inside_expr("_ce", "_cn"),
-    ]
-    edge_touches = F.expr(
-        "exists(edges, e -> greatest(e.x1, e.x2) >= _cw AND least(e.x1, e.x2) <= _ce"
-        " AND greatest(e.y1, e.y2) >= _cs AND least(e.y1, e.y2) <= _cn)"
+    margin = "1e-9D * (abs(e.x2 - e.x1) + abs(e.y2 - e.y1))"
+    edge_meets = F.expr(
+        f"exists(edges, e -> greatest(e.x1, e.x2) >= {cw} AND least(e.x1, e.x2) <= {ce}"
+        f" AND greatest(e.y1, e.y2) >= {cs} AND least(e.y1, e.y2) <= {cn}"
+        f" AND greatest({side}) >= -{margin} AND least({side}) <= {margin})"
     )
-    full = corner_in[0] & corner_in[1] & corner_in[2] & corner_in[3] & ~edge_touches
-    df = df.withColumn("full", full)
-    return df.drop(
-        "_ix0", "_ix1", "_iy0", "_iy1", "_ix", "_iy", "_cw", "_ce", "_cs", "_cn"
+    return cells.select(
+        *polys_edged.columns,
+        (F.col("_iy") * two_n + F.col("_ix")).cast("long").alias("cell"),
+        (~edge_meets & _inside_expr(cw, cs)).alias("full"),
     )
 
 
 def _inside_expr(lon_col: str, lat_col: str, edges_col: str = "edges"):
-    """Even-odd ray cast (eastward ray) as one native expression."""
+    """Even-odd ray cast (eastward ray) as one native expression;
+    ``lon_col``/``lat_col`` may be any SQL expression."""
     return F.expr(
         f"size(filter({edges_col}, e -> "
         f"((e.y1 > {lat_col}) != (e.y2 > {lat_col})) AND "

@@ -35,13 +35,13 @@ def assign_tiles(
     """Append ``zoom``, ``tile_x``, ``tile_y``, ``tile_key`` for every
     zoom level (one output row per input row per zoom)."""
     zoom = F.explode(F.array(*[F.lit(z) for z in zooms])).alias("zoom")
-    df = df.select("*", zoom)
-    tx = E.tile_x(lon, F.col("zoom"))
-    ty = E.tile_y(lat, F.col("zoom"))
-    return (
-        df.withColumn("tile_x", tx)
-        .withColumn("tile_y", ty)
-        .withColumn("tile_key", E.tile_key(F.col("tile_x"), F.col("tile_y"), F.col("zoom")))
+    # one projection after the explode; ``tile_key`` reads its
+    # siblings as lateral column aliases (the analyzer nests them)
+    return df.select("*", zoom).select(
+        "*",
+        E.tile_x(lon, F.col("zoom")).alias("tile_x"),
+        E.tile_y(lat, F.col("zoom")).alias("tile_y"),
+        E.tile_key(F.col("tile_x"), F.col("tile_y"), F.col("zoom")).alias("tile_key"),
     )
 
 

@@ -299,6 +299,41 @@ def test_point_in_polygon_matches_python_oracle(spark):
     assert len(got) > 30  # fixture sanity: the join is non-trivial
 
 
+def test_full_cover_cells_are_inside_by_ray_cast(spark):
+    """``full`` lets a candidate skip the ray cast, so it must be sound:
+    every point of a full cover cell (corners, edge midpoints, centre
+    and random points) is inside its polygon by the ray cast, on
+    seeded random polygons.  The test is exact, not by edge bbox: a
+    diamond, whose four edge bboxes tile its whole bbox, still gets
+    full cells."""
+    from proj_spark.operators.spatial_join import polygon_cover, polygon_edges
+
+    polys = _fixture_polys(n=25, seed=11)
+    polys.append(
+        ("diamond", [(-100.0 + x, 40.0 + y) for x, y in [(4, 0), (0, 4), (-4, 0), (0, -4), (4, 0)]])
+    )
+    rings = dict(polys)
+    pdf = spark.createDataFrame(
+        [
+            {"poly_id": pid, "ring": [{"lon": x, "lat": y} for x, y in ring], "poly_seq": i}
+            for i, (pid, ring) in enumerate(polys)
+        ]
+    )
+    rng = np.random.default_rng(5)
+    grid = [(u, v) for u in (0.0, 0.5, 1.0) for v in (0.0, 0.5, 1.0)]
+    for res in (7, 9):
+        n = 1 << res
+        dx, dy = 360.0 / (2 * n), 180.0 / n
+        full = polygon_cover(polygon_edges(pdf), res).where("full").select("poly_id", "cell")
+        full = full.collect()
+        assert any(r.poly_id == "diamond" for r in full), res
+        for r in full:
+            iy, ix = divmod(r.cell, 2 * n)
+            w, s = ix * dx - 180.0, iy * dy - 90.0
+            for u, v in grid + [tuple(p) for p in rng.random((4, 2))]:
+                assert _inside(w + u * dx, s + v * dy, rings[r.poly_id]), (res, r)
+
+
 def test_point_in_polygon_first_match_priority(spark):
     """Two overlapping polygons: lower poly_seq must win (grid-list
     ordering semantics, ref src/pj_apply_gridshift.c:143)."""
