@@ -1,18 +1,22 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: the flagship headline and the N-vs-4N scaling
+modes.
 
-Writes the full record to a sidecar JSON under /tmp/proj_spark_bench/,
-prints its path, then ONE compact JSON headline as the last line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "rows_per_sec": ..., ...}
+Default run (local[$SPARK_GRAFT_CPUS], $SPARK_GRAFT_BENCH_IMAGES rows):
+the north-star flagship -- images -> datum reprojection -> point-in-
+polygon join -> multi-zoom tiles -> rollup, median of 3 runs -- read
+against a fixed pure-compute box sentinel.  It writes the full record to
+a sidecar JSON under /tmp/proj_spark_bench/, prints its path, then ONE
+compact JSON headline as the last line:
+  {"metric": "...", "value": <flagship median sec>, "unit": "sec",
+   "cpus": ..., "rows_per_sec": ..., "queries": {"flagship_pip_tiles": ...},
+   "sentinel_rows_per_sec": ...}
 
-The flagship measurement mirrors the BASELINE.json metric: spatial
-join + tile assignment over the input_hint image table (point-in-
-polygon against fixture polygons, multi-zoom tile rollup), reported
-as rows/sec.  Set SPARK_GRAFT_SCALING=8,32 to run the flagship at two
-parallelism levels and report scaling efficiency, or to one of
-shuffle/payload/warp/compute/cluster for an N-vs-4N executor pair on
-local-cluster (the sandbox stand-in for the N->4N criterion).
+SPARK_GRAFT_SCALING=<mode> instead runs one N-vs-4N executor pair on
+local-cluster (the sandbox stand-in for the N->4N criterion) and prints
+one JSON line: shuffle, payload, warp, compute or cluster (see
+_pair_modes; cluster also takes SPARK_GRAFT_SCALE_SWEEP=1,2,...), or
+skew for the hot-cell skew demo.  Per-operator and per-layer numbers
+are perfbench's (perfbench/README.md).
 """
 from __future__ import annotations
 
@@ -23,19 +27,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "2000000"))
 # flagship input layout: 'clustered' (default; the north_star's
-# centroid-keyed Iceberg sort order) or 'wide' (the unclustered wide
-# table with pruned scan — the compute-bound scaling regime recorded in
+# centroid-keyed Iceberg sort order) or 'unclustered' (the same rows in
+# random order -- the wide-scan regime of the scaling pairs recorded in
 # BENCH_SCALING.json)
 FLAGSHIP_TABLE = os.environ.get("SPARK_GRAFT_FLAGSHIP_TABLE", "clustered")
 
 
 def _img_cache(n: int) -> str:
-    if n == N_IMAGES and "SPARK_GRAFT_IMG_CACHE" in os.environ:
-        return os.environ["SPARK_GRAFT_IMG_CACHE"]
     return f"/tmp/proj_spark_bench/images_{n}"
 
 
@@ -46,58 +47,6 @@ def _pts_cache(n: int) -> str:
 def _pts_uncl_cache(n: int) -> str:
     return f"{_img_cache(n)}_pts_u"
 
-
-# module-level aliases for the default size (back-compat)
-_IMG_CACHE = _img_cache(N_IMAGES)
-_PTS_CACHE = _pts_cache(N_IMAGES)
-_PTS_UNCL_CACHE = _pts_uncl_cache(N_IMAGES)
-
-_SF1_CACHE = "/tmp/proj_spark_bench/sf1_scaled10"
-# tables the headline queries touch; key column(s) remapped per replica
-_SF1_TABLES = {
-    "orders": ("o_orderkey",),
-    "lineitem": ("l_orderkey",),
-    "customer": ("c_custkey",),
-    "documents": ("doc_id",),
-    "embeddings": ("vec_id",),
-    "nation": (),   # small dim: copied as-is (query side of knn)
-    "events": ("event_id",),
-}
-
-
-def _sf1_dir(spark, src_dir: str) -> str:
-    """Materialize a 10x-replicated copy of ``src_dir`` (sf0.1 -> an
-    sf1-equivalent row count) under /tmp, once.  Keys are remapped
-    key*10+replica so point distributions stay uniform (synth_lon/lat
-    derive from the key); document text gets a per-replica token so
-    near-dup timing isn't dominated by 10-way exact clones."""
-    from pyspark.sql import functions as F
-
-    done = os.path.join(_SF1_CACHE, "_DONE")
-    if not os.path.exists(done):
-        os.makedirs(_SF1_CACHE, exist_ok=True)
-        reps = F.explode(F.sequence(F.lit(0), F.lit(9))).alias("_rep")
-        for tbl, keys in _SF1_TABLES.items():
-            src = os.path.join(src_dir, f"{tbl}.parquet")
-            if not os.path.exists(src):
-                continue
-            df = spark.read.parquet(src)
-            if keys:
-                df = df.select("*", reps)
-                for k in keys:
-                    df = df.withColumn(k, F.col(k) * 10 + F.col("_rep"))
-                if tbl == "documents":
-                    df = df.withColumn(
-                        "text",
-                        F.concat(F.col("text"), F.lit(" r"), F.col("_rep")),
-                    )
-                df = df.drop("_rep")
-            df.write.mode("overwrite").parquet(
-                os.path.join(_SF1_CACHE, f"{tbl}.parquet")
-            )
-        with open(done, "w") as f:
-            f.write("ok\n")
-    return _SF1_CACHE
 
 
 def _image_table(spark, n_images: int):
@@ -191,9 +140,9 @@ def _pts_uncl_table(spark, n_images: int):
 
 # the flagship input's (cache dir, table) for SPARK_GRAFT_FLAGSHIP_TABLE
 _FLAGSHIP_CACHE, _FLAGSHIP_SOURCE = {
-    "wide": (_img_cache, _image_table),
+    "clustered": (_pts_cache, _pts_table),
     "unclustered": (_pts_uncl_cache, _pts_uncl_table),
-}.get(FLAGSHIP_TABLE, (_pts_cache, _pts_table))
+}[FLAGSHIP_TABLE]
 
 
 def _warm_map_in_pandas(spark, slots: int):
@@ -346,20 +295,6 @@ def _flagship(spark, n_images: int):
     return n_images, n_tiles + int(stats.n_polys)
 
 
-def _sink(df) -> int:
-    """Run ``df`` to completion through the noop sink and return its
-    row count.  A timed ``count()`` lets Catalyst prune the projected
-    columns, and with them the pandas-UDF kernels that compute them."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return obs.get["rows"]
-
-
 def _n_verified(df) -> int:
     """Rows passing the payload gate (decode + PSNR>=40 + caption)."""
     from pyspark.sql import functions as F
@@ -370,31 +305,11 @@ def _n_verified(df) -> int:
     return int(verify_payloads(df).agg(F.sum(ok)).collect()[0][0])
 
 
-def _payload_lane(spark, n_img: int, cpus: int, path: str) -> dict:
-    """Encode ``n_img`` real PNG/JPEG payloads to ``path``, then time
-    the decode-verify gate over every stored row."""
-    from proj_spark.sources.images import generate_images
-
-    t0 = time.time()
-    generate_images(spark, n_img, partitions=4 * cpus).write.mode("overwrite").parquet(path)
-    lane = {"encode_sec": round(time.time() - t0, 3)}
-    t0 = time.time()
-    ok = _n_verified(spark.read.parquet(path))
-    lane["decode_verify_sec"] = round(time.time() - t0, 3)
-    lane["n_images"] = n_img
-    lane["n_verified_ok"] = ok
-    lane["decode_rows_per_sec"] = round(n_img / lane["decode_verify_sec"], 1)
-    return lane
-
-
 def run_benchmarks(cpus: int = CPUS) -> dict:
-    import __spark_entry__ as entrymod
     from proj_spark.session import build_session
 
     spark = build_session("proj-spark-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-
-    timings: dict[str, float] = {}
 
     # fixture materialization (not measured as pipeline time): the wide
     # image table and its clustered point view (the Iceberg-layout
@@ -430,210 +345,6 @@ def run_benchmarks(cpus: int = CPUS) -> dict:
         n_rows, _ = _flagship(spark, N_IMAGES)
         flag_walls.append(time.time() - t0)
     flagship_s = sorted(flag_walls)[1]
-    timings["flagship_pip_tiles"] = round(flagship_s, 3)
-
-    qs = entrymod.queries()
-    headline = [
-        "tile_multizoom",      # explode + shuffle rollup, 600k x 3 rows
-        "utm_fwd",             # pandas-UDF kernel throughput
-        "gridshift_roundtrip", # full datum pipeline w/ grid interpolation
-        "knn",                 # broadcast cross join + window top-k
-        "pip",                 # cell-bucketed ray-cast join
-        "ann_cosine",          # vector fold dot products
-        "webmerc_fwd",         # pure-expression projection
-    ]
-
-    def _time_suite(sf_dir: str, into: dict) -> None:
-        from proj_spark.operators.knn import release_persisted
-
-        for name in headline:
-            t0 = time.time()
-            _sink(qs[name](spark, sf_dir))
-            into[name] = round(time.time() - t0, 3)
-        # free the ranked-stage caches the knn plans pinned (one per
-        # escalation level) now that the action is done
-        release_persisted()
-        # near-dup pipeline at scale settings: fast-mode (xxhash64)
-        # minhash LSH -> candidate pairs (the deterministic dictionary
-        # mode exists only for the DuckDB oracle gate)
-        from proj_spark.operators.dedup import (
-            minhash_lsh_pairs,
-            minhash_signatures,
-            shingle,
-            tokenize,
-        )
-
-        t0 = time.time()
-        docs = shingle(
-            tokenize(spark.read.parquet(f"{sf_dir}/documents.parquet")), w=3
-        )
-        sigs = minhash_signatures(docs, id_col="doc_id", deterministic=False)
-        _sink(minhash_lsh_pairs(sigs))
-        into["minhash_lsh_fast"] = round(time.time() - t0, 3)
-
-    # sf0.1 suite: 3 reps, per-query MEDIAN recorded (round-5 verdict
-    # task 2 — single samples at this scale are noise-dominated; r4's
-    # pip 4.88 s vs r3's 2.33 s was the box, not the plan, but the
-    # artifact couldn't prove it).  Raw rep totals kept alongside.
-    suite_reps: list[dict[str, float]] = []
-    for _ in range(3):
-        rep: dict[str, float] = {}
-        _time_suite(SF_DIR, rep)
-        suite_reps.append(rep)
-    for key in suite_reps[0]:
-        timings[key] = sorted(r[key] for r in suite_reps)[1]
-
-    # the same suite at 10x rows (sf1-equivalent): single-query times at
-    # sf0.1 sit inside a documented +/-80% noise band (BASELINE.md), so
-    # regressions are only readable at a scale where work dominates
-    # startup noise.  On by default for the driver's sf0.1 run; skip
-    # with SPARK_GRAFT_SF1=0 (quick smokes at other SFs skip unless
-    # SPARK_GRAFT_SF1=1).
-    sf1_env = os.environ.get("SPARK_GRAFT_SF1")
-    run_sf1 = sf1_env == "1" or (sf1_env != "0" and SF_DIR.rstrip("/").endswith("sf0.1"))
-    sf1_timings: dict[str, float] = {}
-    if run_sf1:
-        t0 = time.time()
-        sf1_dir = _sf1_dir(spark, SF_DIR)
-        sf1_fixture_s = round(time.time() - t0, 3)
-        _time_suite(sf1_dir, sf1_timings)
-        sf1_timings["fixture_gen_sec"] = sf1_fixture_s
-
-    # image-payload lane (NOT in the suite total, so `value` stays
-    # comparable round-over-round): the metric's PSNR>=40 payload gate
-    # as a throughput number — generate real PNG/JPEG payloads, then
-    # decode + verify every row (sources/jpeg.py baseline codec).
-    n_img = int(os.environ.get("SPARK_GRAFT_BENCH_PAYLOADS", "20000"))
-    try:
-        img_lane = _payload_lane(spark, n_img, cpus, "/tmp/proj_spark_bench/_payload_lane")
-    except Exception as exc:  # never fail the bench for the extra lane
-        img_lane = {"error": str(exc)[:200]}
-
-    # 10x payload lane (round-5 verdict task 7): the same PSNR>=40
-    # decode-verify gate at 10x the images — shows whether the
-    # pure-python codec lane's scheduling overheads stay amortized
-    # (rows/s within 0.8x of the base lane = yes) and puts a number
-    # on the documented libjpeg-turbo swap point.  Skip with
-    # SPARK_GRAFT_BENCH_PAYLOADS_10X=0.
-    img_lane_10x: dict[str, float] = {}
-    try:
-        n_10x = int(
-            os.environ.get("SPARK_GRAFT_BENCH_PAYLOADS_10X", str(10 * n_img))
-        )
-        if n_10x > 0:
-            img_lane_10x = _payload_lane(
-                spark, n_10x, cpus, "/tmp/proj_spark_bench/_payload_lane_10x"
-            )
-            if img_lane.get("decode_rows_per_sec"):
-                img_lane_10x["rate_vs_base_lane"] = round(
-                    img_lane_10x["decode_rows_per_sec"]
-                    / img_lane["decode_rows_per_sec"],
-                    3,
-                )
-    except Exception as exc:
-        img_lane_10x = {"error": str(exc)[:200]}
-
-    # tile-pyramid lane (round 4, NOT in the suite total): COG-style
-    # overview build through the real PNG codec — decode 4 children /
-    # encode 1 parent per output tile, one constant-group-size shuffle
-    # per level (operators/pyramid.py).
-    pyr_lane: dict[str, float] = {}
-    try:
-        import pandas as _pd
-        from pyspark.sql import types as _T
-
-        from proj_spark.operators.pyramid import build_pyramid
-        from proj_spark.sources.images import encode_png, synth_pixels
-
-        side = int(os.environ.get("SPARK_GRAFT_BENCH_TILE_SIDE", "64"))
-        z_from = max(side - 1, 1).bit_length()  # ids fit: side <= 2^z_from
-        tp = 16
-        pyr_schema = _T.StructType(
-            [
-                _T.StructField("x", _T.LongType()),
-                _T.StructField("y", _T.LongType()),
-                _T.StructField("bytes", _T.BinaryType()),
-            ]
-        )
-
-        def _pyr_gen(batches):
-            for b in batches:
-                rows = [
-                    (
-                        int(i) % side,
-                        int(i) // side,
-                        encode_png(synth_pixels(int(i), tp, tp)),
-                    )
-                    for i in b["id"].to_numpy()
-                ]
-                yield _pd.DataFrame(rows, columns=["x", "y", "bytes"])
-
-        spark.range(0, side * side, 1, 4 * cpus).mapInPandas(
-            _pyr_gen, pyr_schema
-        ).write.mode("overwrite").parquet("/tmp/proj_spark_bench/_pyr_base")
-        base_tiles = spark.read.parquet("/tmp/proj_spark_bench/_pyr_base")
-        t0 = time.time()
-        n_total = build_pyramid(base_tiles, z_from, 1, tp).count()
-        dt = time.time() - t0
-        spark.catalog.clearCache()  # drop the per-level persists
-        pyr_lane = {
-            "base_tiles": side * side,
-            "levels": z_from,
-            "overview_tiles_built": n_total - side * side,
-            "build_sec": round(dt, 3),
-            "overview_tiles_per_sec": round((n_total - side * side) / dt, 1),
-        }
-    except Exception as exc:
-        pyr_lane = {"error": str(exc)[:200]}
-
-    # raster-warp lane (round 4, NOT in the suite total): reproject a
-    # 4096x4096 plate-carrée raster (64x64 tiles) onto zoom-10
-    # web-mercator tiles — broadcast candidate map, one bounded-fan
-    # shuffle, vectorized inverse-map gather (operators/warp.py).
-    warp_lane: dict[str, float] = {}
-    try:
-        from proj_spark.operators.warp import (
-            LatLonGrid,
-            lcg_tiles,
-            warp_to_webmerc,
-        )
-
-        wgrid = LatLonGrid(
-            lon0=-120.0, lat0=48.0, dlon=0.005, dlat=0.005,
-            width=4096, height=4096, tile_px=64,
-        )
-        # materialize the source raster first (fixture cost, untimed)
-        # so the lane measures the WARP, not the LCG generation
-        lcg_tiles(spark, wgrid, partitions=4 * cpus).write.mode(
-            "overwrite"
-        ).parquet("/tmp/proj_spark_bench/_warp_src")
-        wtiles = spark.read.parquet("/tmp/proj_spark_bench/_warp_src")
-        t0 = time.time()
-        n_out = warp_to_webmerc(spark, wtiles, wgrid, zoom=10, out_px=64).count()
-        dt = time.time() - t0
-        warp_lane = {
-            "source_px": wgrid.width * wgrid.height,
-            "out_tiles": n_out,
-            "out_px": n_out * 64 * 64,
-            "warp_sec": round(dt, 3),
-            "out_mpx_per_sec": round(n_out * 64 * 64 / dt / 1e6, 2),
-        }
-    except Exception as exc:
-        warp_lane = {"error": str(exc)[:200]}
-
-    # overlay/hull lane (round 5, NOT in the suite total): the
-    # reference-point-dedup joins and the hull-reduction diameter over
-    # the same sf tables — timed as one lane so the round artifact
-    # carries their throughput without disturbing the suite bands.
-    overlay_lane: dict[str, float] = {}
-    try:
-        for qn in ("bbox_overlay", "interval_join", "diameter"):
-            t0 = time.time()
-            n = _sink(qs[qn](spark, SF_DIR))
-            overlay_lane[qn + "_sec"] = round(time.time() - t0, 3)
-            overlay_lane[qn + "_rows"] = n
-    except Exception as exc:
-        overlay_lane = {"error": str(exc)[:200]}
 
     # box-health sentinel: fixed pure-compute probe, median of 3 —
     # makes a degraded-box night visible in THIS json (task 2)
@@ -642,41 +353,18 @@ def run_benchmarks(cpus: int = CPUS) -> dict:
     except Exception as exc:  # never fail the bench for the probe
         sentinel = {"error": str(exc)[:200]}
 
-    total = round(sum(timings.values()), 3)
     result = {
-        "metric": "spatial-join+tile-assignment pipeline + operator suite wall time",
-        "value": total,
+        "metric": "flagship pipeline wall sec (reproject -> PIP -> multi-zoom tiles -> rollup, median of 3)",
+        "value": round(flagship_s, 3),
         "unit": "sec",
-        "queries": timings,
-        "queries_note": (
-            "per-query values are the MEDIAN of 3 suite reps "
-            "(flagship likewise median-of-3); raw rep totals in "
-            "suite_rep_totals_sec"
-        ),
-        "suite_rep_totals_sec": [
-            round(sum(r.values()), 3) for r in suite_reps
-        ],
-        "sf": SF_DIR.rstrip("/").split("sf")[-1],
+        "queries": {"flagship_pip_tiles": round(flagship_s, 3)},
         "cpus": cpus,
         "flagship_rows": n_rows,
         "flagship_runs_sec": [round(w, 3) for w in flag_walls],
         "rows_per_sec": round(n_rows / flagship_s, 1),
         "fixture_gen_sec": fixture_s,
         "box_sentinel": sentinel,
-        "image_payload_lane": img_lane,
-        "image_payload_lane_10x": img_lane_10x,
-        "tile_pyramid_lane": pyr_lane,
-        "raster_warp_lane": warp_lane,
-        "overlay_hull_lane": overlay_lane,
     }
-    if sf1_timings:
-        result["sf1_queries"] = sf1_timings
-        result["sf1_note"] = (
-            "PRIMARY per-query signal: same suite at 10x-replicated rows "
-            "(sf1-equivalent, keys remapped key*10+replica; see bench.py "
-            "_sf1_dir) — 10x the work makes plan regressions readable "
-            "above startup noise, unlike the sf0.1 samples"
-        )
     spark.stop()
     return result
 
@@ -1164,7 +852,7 @@ def headline(record: dict) -> str:
     """The compact last stdout line (at most ~1.5 KB).  The round
     artifacts (BENCH_r0N.json) keep only the last 2000 characters of
     stdout, which the one-line full record outgrew in round 5."""
-    keys = ("metric", "value", "unit", "sf", "cpus", "rows_per_sec", "queries", "sf1_queries", "scaling")
+    keys = ("metric", "value", "unit", "cpus", "rows_per_sec", "queries")
     head = {k: record[k] for k in keys if k in record}
     head["sentinel_rows_per_sec"] = record.get("box_sentinel", {}).get("rows_per_sec")
     return json.dumps(head, separators=(",", ":"))
@@ -1218,24 +906,12 @@ def main():
         if scaling == "cluster":
             out["value"] = pair["4n_executors"]["wall_sec"]
             out["unit"] = "sec"
-            out["sf"] = SF_DIR.rstrip("/").split("sf")[-1]
             out["scaling_efficiency_narrow_stage"] = _efficiency(
                 pair["n_executors"], pair["4n_executors"], "narrow_rows_per_sec"
             )
         print(json.dumps(out))
     elif scaling:
-        # SPARK_GRAFT_SCALING=8,32: the full bench at each local[k]
-        levels = [int(x) for x in scaling.split(",")]
-        runs = {c: run_benchmarks(c) for c in levels}
-        lo, hi = min(levels), max(levels)
-        tp = {c: runs[c]["rows_per_sec"] for c in levels}
-        out = runs[hi]
-        out["scaling"] = {
-            "levels": levels,
-            "rows_per_sec": tp,
-            "efficiency": round((tp[hi] / tp[lo]) / (hi / lo), 3),
-        }
-        _emit(out)
+        raise SystemExit(f"SPARK_GRAFT_SCALING={scaling!r}: not skew or one of {sorted(modes)}")
     else:
         _emit(run_benchmarks())
 

@@ -255,3 +255,45 @@ def test_exhausted_round_bound_warns(spark, op, caplog):
     assert len(msgs) == 1, msgs
     assert msgs[0].startswith(f"{name}: not converged after max_rounds=1")
     assert "changed rows per round: [" in msgs[0]
+
+
+# Spark jobs of one build + collect of each registry query below, with
+# AQE and auto-broadcast off (the pinning of test_one_spark_job_per_round)
+# on the sf0.001 fixture.  Measured, not designed: a change may lower a
+# ceiling, and one that raises it has added a job.  BASELINE.md
+# "Jobs per operator" lists the jobs behind each number.
+JOB_CEILINGS = {"q_dbscan": 4, "q_knn": 4}
+
+
+@pytest.mark.parametrize("query", sorted(JOB_CEILINGS))
+def test_operator_job_ceiling(spark, query):
+    """Building and collecting the query runs no more Spark jobs than
+    its pinned ceiling; a failure lists every job's description."""
+    import uuid
+
+    import __spark_entry__ as entry
+    from tests.test_entry_contract import SF_DIR
+
+    sc = spark.sparkContext
+    conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    group = f"job-ceiling-{uuid.uuid4().hex[:8]}"
+    try:
+        sc.setJobGroup(group, f"{query} job-ceiling gate")
+        getattr(entry, query)(spark, SF_DIR).collect()
+    finally:
+        sc.setJobGroup(None, None)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    jobs = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    store = sc._jsc.sc().statusStore()
+    listing = [
+        f"job {j}: {d} | {store.job(j).name()}"
+        for j, d in zip(jobs, _job_descriptions(sc, jobs))
+    ]
+    assert len(jobs) <= JOB_CEILINGS[query], "\n".join(listing)

@@ -131,3 +131,67 @@ def test_bench_headline_fits_a_2000_char_tail():
     assert head["rows_per_sec"] == record["rows_per_sec"]
     assert head["queries"] == record["queries"]
     assert head["sentinel_rows_per_sec"] == record["box_sentinel"]["rows_per_sec"]
+
+
+def _bench_repro_envs() -> list[tuple[str, dict]]:
+    """(repro string, its leading ``NAME=value`` environment) for every
+    ``repro*`` line of BENCH_SCALING.json that runs ``python bench.py``."""
+    import re
+    import shlex
+
+    with open(os.path.join(ROOT, "BENCH_SCALING.json"), encoding="utf-8") as f:
+        doc = json.load(f)
+    found = []
+
+    def walk(node):
+        if isinstance(node, dict):
+            for k, v in node.items():
+                if k.startswith("repro") and isinstance(v, str):
+                    found.append(v)
+                walk(v)
+        elif isinstance(node, list):
+            for v in node:
+                walk(v)
+
+    walk(doc)
+    out = []
+    for line in found:
+        if not re.search(r"\bpython3? bench\.py\b", line):
+            continue
+        env = {}
+        for tok in shlex.split(line):
+            if "=" not in tok:
+                break
+            name, value = tok.split("=", 1)
+            env[name] = value
+        out.append((line, env))
+    return out
+
+
+def test_bench_repro_lines_name_kept_modes_and_knobs():
+    """Every recorded ``python bench.py`` repro line still selects a mode
+    bench.py runs, and every SPARK_GRAFT_* knob it sets is still read by
+    bench.py or the session factory; the tools' imports from bench exist."""
+    if ROOT not in sys.path:
+        sys.path.insert(0, ROOT)
+    import bench
+
+    readers = ""
+    for rel in ("bench.py", os.path.join("proj_spark", "session.py")):
+        with open(os.path.join(ROOT, rel), encoding="utf-8") as f:
+            readers += f.read()
+    repros = _bench_repro_envs()
+    assert repros, "BENCH_SCALING.json lists no bench.py repro line"
+    modes = bench._pair_modes()
+    for line, env in repros:
+        mode = env.get("SPARK_GRAFT_SCALING")
+        assert mode is None or mode == "skew" or mode in modes, line
+        if "SPARK_GRAFT_SCALE_SWEEP" in env:
+            assert mode == "cluster", line
+        unread = [n for n in env if n.startswith("SPARK_GRAFT_") and f'"{n}"' not in readers]
+        assert unread == [], line
+    for name in (
+        "CPUS", "_pts_uncl_cache", "_pts_uncl_table",
+        "_warm_map_in_pandas", "_flagship", "_box_sentinel",
+    ):
+        assert hasattr(bench, name), name
