@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from proj_spark.crs import CRS
 from proj_spark.kernels.xmath import DEG_TO_RAD
 from proj_spark.functions import expressions as E
+from proj_spark.sources.tables import load_table
 
 # --------------------------------------------------------------- constants
 D = repr(DEG_TO_RAD)  # exact float literal shared by all SQL oracles
@@ -53,7 +54,7 @@ def _lat_sql(k: str) -> str:
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return load_table(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _points(spark, sf_dir, table: str, key: str) -> DataFrame:

@@ -75,8 +75,6 @@ def _pts_table(spark, n_images: int):
     per-cell partial aggregates (each file covers few tiles), so
     rollup shuffles carry ~distinct-tiles rows instead of
     ~input-partitions x distinct-tiles."""
-    from pyspark.sql import functions as CF
-
     from proj_spark.functions import expressions as CE
 
     cache = _pts_cache(n_images)
@@ -94,9 +92,7 @@ def _pts_table(spark, n_images: int):
             from proj_spark.sources.images import generate_points
 
             imgs = generate_points(spark, n_images, partitions=4 * CPUS)
-        key = CE.tile_key(
-            CE.tile_x("lon", CF.lit(11)), CE.tile_y("lat", CF.lit(11)), CF.lit(11)
-        )
+        key = CE.tile_key(CE.tile_x("lon", 11), CE.tile_y("lat", 11), 11)
         (
             imgs.withColumn("_ck", key)
             .repartitionByRange(4 * CPUS, "_ck")

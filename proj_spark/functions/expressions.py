@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels.xmath import DEG_TO_RAD
@@ -52,6 +52,26 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def _q(name: str) -> str:
+    """Back-quoted SQL identifier of a column name; ``a.b`` is field
+    ``b`` of struct ``a``, as for ``F.col``."""
+    return ".".join("`" + part.replace("`", "``") + "`" for part in name.split("."))
+
+
+def _sql(x: Column | str | int | float) -> str:
+    """SQL text of a builder argument: a column name, an int (``L``
+    past the INT range, the type ``F.lit`` gives it), a float (``D``:
+    a bare ``180.0`` parses as DECIMAL) or a Column (its expression's
+    own SQL, which costs a few Py4J round trips)."""
+    if isinstance(x, str):
+        return _q(x)
+    if isinstance(x, int):
+        return str(x) if -(2**31) <= x < 2**31 else f"{x}L"
+    if isinstance(x, float):
+        return f"({x!r}D)"
+    return f"({SparkSession.active()._jsparkSession.expression(x._jc).sql()})"
+
+
 # --------------------------------------------------------------- key->point
 def frac(x: Column) -> Column:
     """Fractional part (matches DuckDB ``x - floor(x)`` exactly)."""
@@ -74,10 +94,18 @@ def synth_lat(key: Column | str, lo: float = 25.0, span: float = 24.0) -> Column
 
 
 # ------------------------------------------------------------------ adjlon
+# The builders of the composed path (adjlon, tiles, cell ids) are SQL
+# text: ``F.expr`` is one Py4J command, where every Column operator or
+# ``F.<fn>`` call is its own round trip (about ten with PySpark's
+# query-context capture).  ``_<name>(...)`` takes and returns SQL text;
+# the public builder wraps it in one ``F.expr``.
+def _adjlon(lon: str) -> str:
+    return f"({lon} - 360.0D * floor(({lon} + 180.0D) / 360.0D))"
+
+
 def adjlon_deg(lon: Column | str) -> Column:
     """Wrap degrees longitude to [-180, 180) (src/adjlon.c semantics)."""
-    lon = _c(lon)
-    return lon - 360.0 * F.floor((lon + 180.0) / 360.0)
+    return F.expr(_adjlon(_sql(lon)))
 
 
 # ----------------------------------------------------------- merc / tiles
@@ -93,29 +121,49 @@ def webmerc_y(lat_deg: Column | str, a: float = WGS84_A) -> Column:
     return F.lit(a) * F.log(F.tan(F.lit(math.pi / 4.0) + phi * 0.5))
 
 
-def tile_x(lon_deg: Column | str, zoom: Column | int) -> Column:
+def _tile_n(zoom: str) -> str:
+    return f"power(2.0D, CAST({zoom} AS DOUBLE))"
+
+
+def _clamp_tile(t: str, zoom: str) -> str:
+    n = _tile_n(zoom)
+    return f"CAST(least(greatest({t}, 0), CAST({n} - 1 AS BIGINT)) AS BIGINT)"
+
+
+def _tile_x(lon: str, zoom: str) -> str:
+    return _clamp_tile(f"floor(({lon} + 180.0D) / 360.0D * {_tile_n(zoom)})", zoom)
+
+
+def _tile_y(lat: str, zoom: str) -> str:
+    t = f"tan({lat} * {DEG_TO_RAD!r}D)"
+    asinh_t = f"ln({t} + sqrt({t} * {t} + 1.0D))"
+    ty = f"floor((1.0D - {asinh_t} / {math.pi!r}D) / 2.0D * {_tile_n(zoom)})"
+    return _clamp_tile(ty, zoom)
+
+
+def _tile_key(tx: str, ty: str, zoom: str) -> str:
+    return (
+        f"CAST({zoom} AS BIGINT) * {2**58}L + CAST({ty} AS BIGINT) * {2**29}"
+        f" + CAST({tx} AS BIGINT)"
+    )
+
+
+def tile_x(lon_deg: Column | str, zoom: Column | str | int) -> Column:
     """Web-Mercator tile column at ``zoom`` (slippy-map convention).
 
     n = 2^zoom; tx = floor((lon+180)/360 * n), clamped into [0, n-1].
+    ``zoom`` is an int or the name of a zoom column.
     """
-    z = F.lit(zoom) if isinstance(zoom, int) else zoom
-    n = F.pow(F.lit(2.0), z.cast("double"))
-    tx = F.floor((_c(lon_deg) + 180.0) / 360.0 * n)
-    return F.least(F.greatest(tx, F.lit(0)), (n - 1).cast("long")).cast("long")
+    return F.expr(_tile_x(_sql(lon_deg), _sql(zoom)))
 
 
-def tile_y(lat_deg: Column | str, zoom: Column | int) -> Column:
+def tile_y(lat_deg: Column | str, zoom: Column | str | int) -> Column:
     """ty = floor((1 - asinh(tan(phi))/pi)/2 * n), clamped.
 
     ``asinh(t) = ln(t + sqrt(t^2+1))`` written out so the DuckDB oracle
     can use the identical expression.
     """
-    z = F.lit(zoom) if isinstance(zoom, int) else zoom
-    n = F.pow(F.lit(2.0), z.cast("double"))
-    t = F.tan(_rad(_c(lat_deg)))
-    asinh_t = F.log(t + F.sqrt(t * t + 1.0))
-    ty = F.floor((1.0 - asinh_t / math.pi) / 2.0 * n)
-    return F.least(F.greatest(ty, F.lit(0)), (n - 1).cast("long")).cast("long")
+    return F.expr(_tile_y(_sql(lat_deg), _sql(zoom)))
 
 
 def quadkey(tx: Column | str, ty: Column | str, zoom: int) -> Column:
@@ -318,16 +366,13 @@ def quadkey_decode(qk: str) -> tuple[int, int, int]:
     return len(qk), tx, ty
 
 
-def tile_key(tx: Column, ty: Column, zoom: Column | int) -> Column:
+def tile_key(tx: Column | str, ty: Column | str, zoom: Column | str | int) -> Column:
     """Single int64 tile key: (zoom << 58) | (ty << 29) | tx.
 
     29 bits per axis supports zoom <= 28; keeps joins on one long column
     instead of a 3-tuple (one comparison in codegen, narrower shuffle).
     """
-    z = F.lit(zoom) if isinstance(zoom, int) else zoom
-    return (
-        z.cast("long") * F.lit(2 ** 58) + ty.cast("long") * F.lit(2 ** 29) + tx.cast("long")
-    )
+    return F.expr(_tile_key(_sql(tx), _sql(ty), _sql(zoom)))
 
 
 # -------------------------------------------------------------- haversine
@@ -354,6 +399,16 @@ def haversine_m(
 
 
 # ------------------------------------------------------------- cell index
+def _cell_id(lon: str, lat: str, res: int) -> str:
+    n = 1 << res  # cells per 180 deg
+    ix = f"floor(({_adjlon(lon)} + 180.0D) / 360.0D * {2.0 * n!r}D)"
+    iy = f"floor(({lat} + 90.0D) / 180.0D * {float(n)!r}D)"
+    return (
+        f"CAST(least(greatest({iy}, 0), {n - 1}) * {2 * n}"
+        f" + least(greatest({ix}, 0), {2 * n - 1}) AS BIGINT)"
+    )
+
+
 def cell_id(lon_deg: Column | str, lat_deg: Column | str, res: int) -> Column:
     """Equirectangular cell index at resolution ``res`` (cells are
     (360/2^res) x (180/2^res) degrees), encoded as one int64:
@@ -366,12 +421,7 @@ def cell_id(lon_deg: Column | str, lat_deg: Column | str, res: int) -> Column:
     The equal-area variants (HEALPix/ISEA, ref PJ_healpix.c:468,
     PJ_isea.c:320) plug into the same id layout via the kernel UDFs.
     """
-    n = float(1 << res)  # cells per 180 deg
-    ix = F.floor((adjlon_deg(_c(lon_deg)) + 180.0) / 360.0 * (2.0 * n))
-    ix = F.least(F.greatest(ix, F.lit(0)), F.lit(int(2 * n) - 1))
-    iy = F.floor((_c(lat_deg) + 90.0) / 180.0 * n)
-    iy = F.least(F.greatest(iy, F.lit(0)), F.lit(int(n) - 1))
-    return (iy * F.lit(int(2 * n)) + ix).cast("long")
+    return F.expr(_cell_id(_sql(lon_deg), _sql(lat_deg), res))
 
 
 def cell_parent(cell: Column, res: int) -> Column:

@@ -29,6 +29,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from ..crs import CRS
 from ..kernels import xmath as m
 from ..plans.pipeline import build_plan
+from .expressions import _q
 
 _XY_SCHEMA = StructType(
     [StructField("x", DoubleType()), StructField("y", DoubleType()), StructField("z", DoubleType())]
@@ -87,15 +88,14 @@ def transform(
     The flagship API (analog of pj_transform over a whole table).
     """
     udf = transform_udf(src, dst)
-    cols = [F.col(lon), F.col(lat)] + ([F.col(z)] if z else [])
-    out = df.withColumn("_xyz", udf(*cols))
-    out = (
-        out.withColumn(out_prefix + "x", F.col("_xyz.x"))
-        .withColumn(out_prefix + "y", F.col("_xyz.y"))
-        .withColumn(out_prefix + "z", F.col("_xyz.z"))
+    # F.expr and one withColumns: every F.col / withColumn is its own
+    # set of Py4J round trips at plan-build time
+    cols = [F.expr(_q(c)) for c in (lon, lat, z) if c]
+    return (
+        df.withColumn("_xyz", udf(*cols))
+        .withColumns({out_prefix + k: F.expr(f"_xyz.{k}") for k in "xyz"})
         .drop("_xyz")
     )
-    return out
 
 
 def geodesic_inverse_udf(a: float = 6378137.0, f: float = 1.0 / 298.257223563):

@@ -18,7 +18,7 @@ This operator fuses the whole per-row pipeline into ONE
   scan(lon, lat) -> [numpy: datum/projection transform (the same
   compiled ``plans.pipeline`` closure the ``transform`` operator
   ships), first-match ray-cast PIP (same formula as
-  ``spatial_join._inside_expr``), slippy tile indices (same formula as
+  ``spatial_join._inside_sql``), slippy tile indices (same formula as
   ``functions.expressions.tile_x/tile_y``), np.unique partial
   aggregate] -> (packed key, count) -> one tiny exchange -> final sum.
 
@@ -279,7 +279,7 @@ def _assign_linear(parrays, lon, lat) -> np.ndarray:
 
 def _raycast_inside(lon, lat, x1, y1, x2, y2) -> np.ndarray:
     """Even-odd eastward ray cast, same arithmetic as the native
-    expression in spatial_join._inside_expr (float64 both ways)."""
+    expression in spatial_join._inside_sql (float64 both ways)."""
     lo = lon[:, None]
     la = lat[:, None]
     with np.errstate(divide="ignore", invalid="ignore"):

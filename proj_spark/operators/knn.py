@@ -382,9 +382,14 @@ def knn_join_hex(
         F.col(q_lon).alias("_qlon"),
         F.col(q_lat).alias("_qlat"),
     )
-    q_cells = q.withColumn(
-        "_cell",
-        F.explode(H.hex_kring(H.hex_cell("_qlon", "_qlat", size_deg), k=ring)),
+    # the query's own cell is a column of its own: inlined into the
+    # unrolled k-ring, each ring element would carry two copies of the
+    # hex_cell expression, and from ring 2 the generated code passes the
+    # JVM's 64 KB method limit (the stage then runs without codegen)
+    q_cells = (
+        q.withColumn("_qcell", H.hex_cell("_qlon", "_qlat", size_deg))
+        .withColumn("_cell", F.explode(H.hex_kring(F.col("_qcell"), k=ring)))
+        .drop("_qcell")
     )
 
     pairs = c.join(F.broadcast(q_cells), c["_ccell"] == q_cells["_cell"], "inner").withColumn(

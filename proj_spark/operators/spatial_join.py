@@ -27,7 +27,7 @@ grouped outputs per polygon use operators.skew.salted_agg.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import expressions as E
@@ -43,26 +43,25 @@ def polygon_edges(polys: DataFrame, ring: str = "ring", poly_id: str = "poly_id"
     Adds ``poly_seq`` (zero-based input order — the first-match
     priority, analog of grid list position) if not present.
     """
+    r = E._q(ring)
     seq = []
     if "poly_seq" not in polys.columns:
-        seq = [(F.row_number().over(Window.orderBy(poly_id)) - 1).alias("poly_seq")]
+        seq = [f"row_number() OVER (ORDER BY {E._q(poly_id)}) - 1 AS poly_seq"]
     # edges i -> i+1 (ring is closed: last == first, so stop at n-2)
-    edges = F.expr(
-        f"transform(slice({ring}, 1, size({ring}) - 1), (v, i) -> "
-        f"named_struct('x1', v.lon, 'y1', v.lat, "
-        f"'x2', {ring}[i + 1].lon, 'y2', {ring}[i + 1].lat))"
+    edges = (
+        f"transform(slice({r}, 1, size({r}) - 1), (v, i) -> "
+        f"named_struct('x1', v.lon, 'y1', v.lat, 'x2', {r}[i + 1].lon, 'y2', {r}[i + 1].lat))"
     )
-    lons = F.expr(f"transform({ring}, v -> v.lon)")
-    lats = F.expr(f"transform({ring}, v -> v.lat)")
+    lons, lats = f"transform({r}, v -> v.lon)", f"transform({r}, v -> v.lat)"
     # one projection: every withColumn would re-analyze the lambdas
-    return polys.select(
+    return polys.selectExpr(
         "*",
         *seq,
-        edges.alias("edges"),
-        F.array_min(lons).alias("bbox_w"),
-        F.array_max(lons).alias("bbox_e"),
-        F.array_min(lats).alias("bbox_s"),
-        F.array_max(lats).alias("bbox_n"),
+        f"{edges} AS edges",
+        f"array_min({lons}) AS bbox_w",
+        f"array_max({lons}) AS bbox_e",
+        f"array_min({lats}) AS bbox_s",
+        f"array_max({lats}) AS bbox_n",
     )
 
 
@@ -76,18 +75,16 @@ def polygon_cover(polys_edged: DataFrame, res: int) -> DataFrame:
     two_n = 2 * n
 
     def ix_of(lon):
-        v = F.floor((F.col(lon) + 180.0) / 360.0 * two_n)
-        return F.least(F.greatest(v, F.lit(0)), F.lit(two_n - 1))
+        return f"least(greatest(floor(({lon} + 180.0D) / 360.0D * {two_n}), 0), {two_n - 1})"
 
     def iy_of(lat):
-        v = F.floor((F.col(lat) + 90.0) / 180.0 * n)
-        return F.least(F.greatest(v, F.lit(0)), F.lit(n - 1))
+        return f"least(greatest(floor(({lat} + 90.0D) / 180.0D * {n}), 0), {n - 1})"
 
     # one select per explode, then one for the outputs: each step
     # re-analyzes the whole plan, lambdas included
-    cells = polys_edged.select(
-        "*", F.explode(F.sequence(ix_of("bbox_w"), ix_of("bbox_e"))).alias("_ix")
-    ).select("*", F.explode(F.sequence(iy_of("bbox_s"), iy_of("bbox_n"))).alias("_iy"))
+    cells = polys_edged.selectExpr(
+        "*", f"explode(sequence({ix_of('bbox_w')}, {ix_of('bbox_e')})) AS _ix"
+    ).selectExpr("*", f"explode(sequence({iy_of('bbox_s')}, {iy_of('bbox_n')})) AS _iy")
 
     # classify each cover cell: fully inside the polygon (every point
     # in it is a hit — candidates skip the ray cast) vs boundary.
@@ -107,22 +104,22 @@ def polygon_cover(polys_edged: DataFrame, res: int) -> DataFrame:
         f"(e.x2 - e.x1) * ({y} - e.y1) - (e.y2 - e.y1) * ({x} - e.x1)" for x, y in corners
     )
     margin = "1e-9D * (abs(e.x2 - e.x1) + abs(e.y2 - e.y1))"
-    edge_meets = F.expr(
+    edge_meets = (
         f"exists(edges, e -> greatest(e.x1, e.x2) >= {cw} AND least(e.x1, e.x2) <= {ce}"
         f" AND greatest(e.y1, e.y2) >= {cs} AND least(e.y1, e.y2) <= {cn}"
         f" AND greatest({side}) >= -{margin} AND least({side}) <= {margin})"
     )
-    return cells.select(
-        *polys_edged.columns,
-        (F.col("_iy") * two_n + F.col("_ix")).cast("long").alias("cell"),
-        (~edge_meets & _inside_expr(cw, cs)).alias("full"),
+    return cells.selectExpr(
+        *[E._q(c) for c in polys_edged.columns],
+        f"CAST(_iy * {two_n} + _ix AS BIGINT) AS cell",
+        f"(NOT {edge_meets}) AND ({_inside_sql(cw, cs)}) AS `full`",
     )
 
 
-def _inside_expr(lon_col: str, lat_col: str, edges_col: str = "edges"):
-    """Even-odd ray cast (eastward ray) as one native expression;
+def _inside_sql(lon_col: str, lat_col: str, edges_col: str = "edges") -> str:
+    """Even-odd ray cast (eastward ray) as one native SQL expression;
     ``lon_col``/``lat_col`` may be any SQL expression."""
-    return F.expr(
+    return (
         f"size(filter({edges_col}, e -> "
         f"((e.y1 > {lat_col}) != (e.y2 > {lat_col})) AND "
         f"{lon_col} < (e.x2 - e.x1) * ({lat_col} - e.y1) / (e.y2 - e.y1) + e.x1"
@@ -147,20 +144,20 @@ def point_in_polygon_join(
     null poly_id (the reference's pass-through-on-miss,
     src/pj_apply_gridshift.c:243).
     """
-    cover = polygon_cover(polygon_edges(polys), res).select(
-        "cell", "poly_id", "poly_seq", "edges", "full"
+    if how not in ("first_match", "left_first", "all"):
+        raise ValueError(f"unknown how={how!r}")
+    cover = polygon_cover(polygon_edges(polys), res).selectExpr(
+        "cell", "poly_id", "poly_seq", "edges", "`full`"
     )
-    pts = points.withColumn("_cell", E.cell_id(lon, lat, res))
+    qlon, qlat = E._q(lon), E._q(lat)
+    pts = points.withColumn("_cell", F.expr(E._cell_id(qlon, qlat, res)))
 
     if how == "all":
         cand = pts.join(F.broadcast(cover), pts["_cell"] == cover["cell"], "inner")
         # fully-interior cells skip the (non-codegen) ray-cast refinement
-        return cand.where(F.col("full") | _inside_expr(lon, lat)).drop(
+        return cand.where(f"`full` OR ({_inside_sql(qlon, qlat)})").drop(
             "cell", "_cell", "edges", "full"
         )
-
-    if how not in ("first_match", "left_first"):
-        raise ValueError(f"unknown how={how!r}")
 
     # first-match WITHOUT any per-point aggregation: the SMALL cover is
     # pre-grouped into one row per cell with a seq-sorted candidate
@@ -169,35 +166,25 @@ def point_in_polygon_join(
     # expression — the 10^12-row side sees a broadcast join plus a
     # projection, ZERO exchanges.  (Correct because a point belongs to
     # exactly one cell, so all its candidates arrive in one array.)
-    cell_cands = cover.groupBy("cell").agg(
-        F.sort_array(
-            F.collect_list(F.struct("poly_seq", "poly_id", "full", "edges"))
-        ).alias("_cands")
+    cell_cands = cover.groupBy(F.expr("cell")).agg(
+        F.expr("sort_array(collect_list(struct(poly_seq, poly_id, `full`, edges))) AS _cands")
     )
     j = pts.join(
         F.broadcast(cell_cands),
         pts["_cell"] == cell_cands["cell"],
         "left" if how == "left_first" else "inner",
     )
-    first = F.get(
-        F.expr(
-            f"filter(_cands, c -> c.full OR ("
-            f"size(filter(c.edges, e -> "
-            f"((e.y1 > {lat}) != (e.y2 > {lat})) AND "
-            f"{lon} < (e.x2 - e.x1) * ({lat} - e.y1) / (e.y2 - e.y1) + e.x1"
-            f")) % 2 = 1))"
-        ),
-        F.lit(0),
+    first = (
+        f"get(filter(_cands, c -> c.full OR ("
+        f"{_inside_sql(qlon, qlat, 'c.edges')})), 0)"
     )
-    out = j.withColumn("_m", first)
+    out = j.withColumn("_m", F.expr(first))
     if how == "first_match":
-        return out.where(F.col("_m").isNotNull()).select(
-            point_id,
-            F.col("_m.poly_id").alias("poly_id"),
-            F.col("_m.poly_seq").alias("poly_seq"),
+        return out.where("_m IS NOT NULL").selectExpr(
+            E._q(point_id), "_m.poly_id AS poly_id", "_m.poly_seq AS poly_seq"
         )
     return out.select(
         *[points[c] for c in points.columns],
-        F.col("_m.poly_id").alias("poly_id"),
-        F.col("_m.poly_seq").alias("poly_seq"),
+        F.expr("_m.poly_id AS poly_id"),
+        F.expr("_m.poly_seq AS poly_seq"),
     )

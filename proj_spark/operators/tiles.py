@@ -1,10 +1,10 @@
 """Raster-tile <-> vector assignment (north-rule operator).
 
 Tile math is pure closed-form Mercator + floor (ref sphere kernel
-src/PJ_merc.c:5-15), so the whole operator is native Column
-expressions — zero Python per row, fully inside WholeStageCodegen,
-and the groupBy(tile) aggregation gets map-side partial aggregation
-for free.
+src/PJ_merc.c:5-15), so the whole operator is native SQL expressions
+(one SQL string per output column, see functions.expressions) — zero
+Python per row, fully inside WholeStageCodegen, and the
+groupBy(tile) aggregation gets map-side partial aggregation for free.
 
 Scale design (10^12 rows):
 - ``assign_tiles`` is a narrow projection: no shuffle at all.
@@ -34,15 +34,18 @@ def assign_tiles(
 ) -> DataFrame:
     """Append ``zoom``, ``tile_x``, ``tile_y``, ``tile_key`` for every
     zoom level (one output row per input row per zoom)."""
-    zoom = F.explode(F.array(*[F.lit(z) for z in zooms])).alias("zoom")
     # one projection after the explode; ``tile_key`` reads its
     # siblings as lateral column aliases (the analyzer nests them)
-    return df.select("*", zoom).select(
+    return df.selectExpr("*", f"explode(array({_zoom_list(zooms)})) AS zoom").selectExpr(
         "*",
-        E.tile_x(lon, F.col("zoom")).alias("tile_x"),
-        E.tile_y(lat, F.col("zoom")).alias("tile_y"),
-        E.tile_key(F.col("tile_x"), F.col("tile_y"), F.col("zoom")).alias("tile_key"),
+        f"{E._tile_x(E._q(lon), 'zoom')} AS tile_x",
+        f"{E._tile_y(E._q(lat), 'zoom')} AS tile_y",
+        f"{E._tile_key('tile_x', 'tile_y', 'zoom')} AS tile_key",
     )
+
+
+def _zoom_list(zooms: list[int]) -> str:
+    return ", ".join(str(int(z)) for z in zooms)
 
 
 def tile_counts(
@@ -62,32 +65,28 @@ def tile_counts(
     shuffle than the old explode form.  Count is algebraic so map-side
     combine neutralizes hot-tile skew.
     """
-    zmax = max(zooms)
+    zmax = int(max(zooms))
     fine = (
-        df.select(
-            E.tile_x(lon, F.lit(zmax)).alias("tile_x"),
-            E.tile_y(lat, F.lit(zmax)).alias("tile_y"),
+        df.selectExpr(
+            f"{E._tile_x(E._q(lon), str(zmax))} AS tile_x",
+            f"{E._tile_y(E._q(lat), str(zmax))} AS tile_y",
         )
-        .groupBy("tile_x", "tile_y")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .groupBy(F.expr("tile_x"), F.expr("tile_y"))
+        .agg(F.expr("count(1) AS n"))
     )
     if len(zooms) == 1 and zooms[0] == zmax:
-        return fine.select(
-            F.lit(zmax).cast("int").alias("zoom"), "tile_x", "tile_y", "n"
-        )
+        return fine.selectExpr(f"CAST({zmax} AS INT) AS zoom", "tile_x", "tile_y", "n")
     # roll the SMALL finest-zoom aggregate up to every requested zoom in
     # the same plan: explode the zoom list over the aggregate (tiny —
     # |distinct finest tiles| x |zooms| rows), shift the indices, and
     # re-aggregate.  One extra (tiny) shuffle, single job, no cache.
-    zoom = F.explode(F.array(*[F.lit(int(z)) for z in zooms])).alias("zoom")
     return (
-        fine.select("tile_x", "tile_y", "n", zoom)
+        fine.selectExpr("tile_x", "tile_y", "n", f"explode(array({_zoom_list(zooms)})) AS zoom")
         .groupBy(
-            "zoom",
-            F.expr(f"shiftright(tile_x, {int(zmax)} - zoom)").alias("tile_x"),
-            F.expr(f"shiftright(tile_y, {int(zmax)} - zoom)").alias("tile_y"),
+            F.expr("zoom"),
+            F.expr(f"shiftright(tile_x, {zmax} - zoom) AS tile_x"),
+            F.expr(f"shiftright(tile_y, {zmax} - zoom) AS tile_y"),
         )
-        .agg(F.sum("n").alias("n"))
-        .select(F.col("zoom").cast("int").alias("zoom"), "tile_x", "tile_y", "n")
+        .agg(F.expr("sum(n) AS n"))
+        .selectExpr("CAST(zoom AS INT) AS zoom", "tile_x", "tile_y", "n")
     )
-

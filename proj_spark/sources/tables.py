@@ -30,9 +30,11 @@ the query code above it is format-blind.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def table_format() -> str:
@@ -48,6 +50,31 @@ def is_path(identifier: str) -> bool:
     return "/" in identifier or identifier.endswith(".parquet")
 
 
+# per session: absolute local path -> (its file listing, the schema
+# that session inferred from it)
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _local_listing(identifier: str) -> tuple[str, tuple] | None:
+    """(absolute path, sorted (name, size, mtime_ns) of every file under
+    it) for a local parquet path; None for another URI scheme, a glob,
+    a missing path or an empty directory."""
+    path = identifier.removeprefix("file:")
+    if "://" in path:
+        return None
+    path = os.path.abspath(path)
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(root, name) for root, _, names in os.walk(path) for name in names
+    ]
+    if not files:
+        return None
+    try:
+        stats = [(f, os.stat(f)) for f in sorted(files)]
+    except OSError:  # a file went away mid-listing: infer as usual
+        return None
+    return path, tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
+
+
 def load_table(spark: SparkSession, identifier: str) -> DataFrame:
     """Read a table by catalog name or parquet path.
 
@@ -55,10 +82,27 @@ def load_table(spark: SparkSession, identifier: str) -> DataFrame:
     session serves (Iceberg, Hive, in-memory views) resolves them;
     paths read as parquet.  Column pruning and predicate pushdown
     behave identically on both (Iceberg additionally prunes manifests
-    by partition transform — free once the table is bucketed)."""
-    if is_path(identifier):
+    by partition transform — free once the table is bucketed).
+
+    Inferring a parquet schema is one Spark job.  For a local path the
+    schema the session inferred is reused while the path's file listing
+    (names, sizes, mtimes) is unchanged; any change infers it again.
+    A parquet reader conf changed in the session after the first load
+    (``spark.sql.parquet.binaryAsString`` and the like) is not seen by a
+    later load of the unchanged path."""
+    if not is_path(identifier):
+        return spark.table(identifier)
+    local = _local_listing(identifier)
+    if local is None:
         return spark.read.parquet(identifier)
-    return spark.table(identifier)
+    path, listing = local
+    schemas: dict[str, tuple[tuple, StructType]] = _SCHEMAS.setdefault(spark, {})
+    cached = schemas.get(path)
+    if cached is not None and cached[0] == listing:
+        return spark.read.schema(cached[1]).parquet(identifier)
+    df = spark.read.parquet(identifier)
+    schemas[path] = (listing, df.schema)
+    return df
 
 
 def write_table(

@@ -49,8 +49,8 @@ def stream_image_ingest(
     ok = gated.where(F.col("caption_ok") & F.col("pixels_ok"))
     keyed = with_centroids(ok)
     return (
-        keyed.withColumn("tile_x", E.tile_x("lon", F.lit(zoom)))
-        .withColumn("tile_y", E.tile_y("lat", F.lit(zoom)))
+        keyed.withColumn("tile_x", E.tile_x("lon", zoom))
+        .withColumn("tile_y", E.tile_y("lat", zoom))
         .drop("caption_ok", "pixels_ok")
     )
 
@@ -101,8 +101,8 @@ def run_image_ingest(
         batch = batch.persist()
         ok = with_centroids(batch.where(ok_cond))
         (
-            ok.withColumn("tile_x", E.tile_x("lon", F.lit(zoom)))
-            .withColumn("tile_y", E.tile_y("lat", F.lit(zoom)))
+            ok.withColumn("tile_x", E.tile_x("lon", zoom))
+            .withColumn("tile_y", E.tile_y("lat", zoom))
             .drop("caption_ok", "pixels_ok")
             .write.mode("overwrite")
             .parquet(f"{sink_dir}/batch={batch_id}")

@@ -150,3 +150,26 @@ def test_knn_hex_plan_broadcasts_ring(spark, knn_fixture):
     df = knn_join_hex(q, cand, k=5, size_deg=2.0, ring=1, max_ring=1)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
+
+
+@pytest.mark.parametrize("max_ring", [2, 3])
+def test_knn_hex_rings_compile_without_codegen_fallback(spark, knn_fixture, max_ring):
+    """The escalation rings 2 and 3 compile under whole-stage codegen:
+    with the fallback off, a generated method past the JVM's 64 KB
+    limit raises instead of running interpreted."""
+    from proj_spark.operators.knn import knn_join_hex
+
+    q, cand = knn_fixture
+
+    def rows():
+        df = knn_join_hex(q, cand, k=5, size_deg=2.0, ring=1, max_ring=max_ring)
+        return sorted(tuple(r) for r in df.collect())
+
+    want = rows()
+    key = "spark.sql.codegen.fallback"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert rows() == want
+    finally:
+        spark.conf.set(key, saved)

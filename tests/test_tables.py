@@ -96,3 +96,39 @@ def test_write_table_sort_by_clusters_rows(spark, tmp_path):
     assert len(rows) == 400 and len(by_file) >= 2
     for f, ks in by_file.items():
         assert ks == sorted(ks), f  # parquet preserves row order per file
+
+
+@pytest.mark.parametrize("partition_by", [None, ["k"]])
+def test_load_table_reuses_inferred_schema_until_files_change(spark, tmp_path, partition_by):
+    """A second load of an unchanged local parquet table runs no Spark
+    job (no schema inference) and returns the same schema and rows; a
+    rewritten table is inferred again."""
+    import uuid
+
+    path = os.path.join(str(tmp_path), "s")
+    df = spark.range(60).select("id", (F.col("id") * 0.5).alias("v"), (F.col("id") % 3).alias("k"))
+    write_table(df, path, partition_by=partition_by)
+    sc = spark.sparkContext
+
+    def jobs_of_load():
+        group = f"load-table-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "load_table schema inference")
+        try:
+            t = load_table(spark, path)
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return t, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first, first_jobs = jobs_of_load()
+    second, second_jobs = jobs_of_load()
+    assert first_jobs >= 1
+    assert second_jobs == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+    write_table(spark.range(5).select("id", F.lit("x").alias("w")), path)
+    third, third_jobs = jobs_of_load()
+    assert third_jobs >= 1
+    assert [f.name for f in third.schema.fields] == ["id", "w"]
+    assert third.count() == 5
